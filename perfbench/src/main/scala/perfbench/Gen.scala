@@ -18,15 +18,17 @@ import graft.model.{Catalog, DefAllowedRow, EntityRow, Turn}
   * does). A share of 1/`replayEvery` of the on-time rows is delivered a
   * second time, byte-identical, `replayLag` positions later. Files hold
   * `rowsPerFile` consecutive positions each, so file order is event-time
-  * order and the file of an original row is `k / rowsPerFile`.
+  * order and the file of an original row is `k / rowsPerFile`. The stream
+  * reads `perTrigger` files per micro-batch.
   */
 final case class Layout(rows: Long, openConvs: Int, turnsPerConv: Int,
-    rowsPerFile: Int, dtMs: Long, replayEvery: Int, replayLag: Long, users: Int) {
+    rowsPerFile: Int, dtMs: Long, replayEvery: Int, replayLag: Long, users: Int,
+    perTrigger: Int) {
   def files: Int = ((rows + rowsPerFile - 1) / rowsPerFile).toInt
 }
 
-/** What the generator planned, counted on the driver from the same pure
-  * functions the executors use.
+/** What the generator planned, counted in the benchmark process from the
+  * same pure functions the Spark tasks use.
   */
 final case class Planned(originals: Long, replays: Long, late: Long, nullText: Long) {
   def rowsIn: Long = originals + replays

@@ -131,7 +131,7 @@ object Probes {
     val ck = new File(ctx.dir, s"probe-$tag")
     Fs.delete(ck)
     val src = spark.readStream.schema(Schemas.transcript)
-      .option("maxFilesPerTrigger", Workloads.FilesPerTrigger).parquet(in.dir.getPath)
+      .option("maxFilesPerTrigger", in.layout.perTrigger).parquet(in.dir.getPath)
     ctx.progress.nextParent = ctx.tracer.current._1
     val t0 = System.nanoTime()
     val q = f(src).writeStream.format("noop").option("checkpointLocation", ck.getPath)
@@ -193,7 +193,7 @@ object Probes {
   def sink(ctx: Ctx, in: Input, last: StreamRun): Unit = ctx.span("probe.sink") {
     val spark = ctx.spark
     val files = new File(ctx.dir, "probe-sink-input")
-    Fs.linkFirst(in.dir, files, Workloads.FilesPerTrigger)
+    Fs.linkFirst(in.dir, files, in.layout.perTrigger)
     val frame = ValidationPipeline.decideFast(spark,
       spark.read.schema(Schemas.transcript).parquet(files.getPath), in.cat).toDF().localCheckpoint()
     val out = new File(ctx.dir, "probe-sink-out")

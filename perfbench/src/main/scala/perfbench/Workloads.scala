@@ -87,15 +87,16 @@ object Workloads {
 
   // Sizes for a 4-core local[4] session; README.md records why.
   val StatelessLayout = Layout(rows = 72000, openConvs = 2000, turnsPerConv = 10,
-    rowsPerFile = 6000, dtMs = 20, replayEvery = 0, replayLag = 0, users = 50)
-  // 72 event-minutes: conversations close 30 minutes after their last turn,
-  // so state is both added and removed; replays trail by 2 event-minutes.
+    rowsPerFile = 6000, dtMs = 20, replayEvery = 0, replayLag = 0, users = 50, perTrigger = 6)
+  // 72 event-minutes in 3 micro-batches: Spark drops late rows against the
+  // previous batch's watermark, so the third batch drops its late rows;
+  // replays trail by 2 event-minutes.
   // The token cache is pre-filled (see prefillTokenCache), so every token
   // decode misses, as for a population beyond the cache; the catalog stays
   // at 20k users because each query start broadcasts it.
   val DedupLayout = Layout(rows = 54000, openConvs = 3000, turnsPerConv = 6,
-    rowsPerFile = 4500, dtMs = 80, replayEvery = 10, replayLag = 1500, users = 20000)
-  val FilesPerTrigger = 6
+    rowsPerFile = 4500, dtMs = 80, replayEvery = 10, replayLag = 1500, users = 20000,
+    perTrigger = 4)
   val SetupReps = 3
   // Warm-up before timing: one full drain, then a drain of the first
   // WarmFiles files, one file per trigger. At these sizes a drain is mostly
@@ -159,7 +160,7 @@ object Workloads {
     val ref = ctx.phase("reference")(reference(ctx, in))
     val refPrint = if (withDedup) None else Some(Checks.fingerprint(ref))
     ctx.phase("warm-up") {
-      drainOnce(ctx, in.dir, FilesPerTrigger, new File(ctx.dir, "warm"), withDedup, in)
+      drainOnce(ctx, in.dir, in.layout.perTrigger, new File(ctx.dir, "warm"), withDedup, in)
       val small = new File(ctx.dir, "warm-input")
       Fs.linkFirst(in.dir, small, WarmFiles)
       drainOnce(ctx, small, 1, new File(ctx.dir, "warm-small"), withDedup, in)
@@ -177,7 +178,7 @@ object Workloads {
         if (traced) ctx.listen() else ctx.unlisten()
         val r = ctx.phase(s"drain $i") {
           ctx.span("run", s"$name-rep$i") {
-            drainOnce(ctx, in.dir, FilesPerTrigger, new File(ctx.dir, s"run$i"), withDedup, in)
+            drainOnce(ctx, in.dir, in.layout.perTrigger, new File(ctx.dir, s"run$i"), withDedup, in)
           }
         }
         ctx.unlisten()
