@@ -98,13 +98,15 @@ object Workloads {
     rowsPerFile = 4500, dtMs = 80, replayEvery = 10, replayLag = 1500, users = 20000,
     perTrigger = 4)
   val SetupReps = 3
-  // Warm-up before timing: one full drain, then a drain of the first
-  // WarmFiles files, one file per trigger. At these sizes a drain is mostly
-  // per-query and per-batch work (planning, state commit, the sink's jobs),
-  // which the JIT keeps speeding up over the first dozen or so batches.
-  val WarmFiles = 2
+  // Warm-up before timing: three untimed full drains. At these sizes a
+  // drain is mostly per-query and per-batch work (planning, state commit,
+  // the sink's jobs), which the JIT keeps speeding up over the first dozen
+  // or so micro-batches.
+  val WarmDrains = 3
   val MinReps = 3
   val MinTracedReps = 2
+  val BatchPhases = Seq("latestOffset", "getBatch", "queryPlanning", "walCommit", "addBatch",
+    "commitOffsets")
 
   // ------------------------------------------------------------------ setup
 
@@ -157,13 +159,10 @@ object Workloads {
     val name = if (withDedup) "drain_dedup" else "drain_stateless"
     val in = prepare(ctx, if (withDedup) DedupLayout else StatelessLayout,
       prefillTokens = withDedup)
-    val ref = ctx.phase("reference")(reference(ctx, in))
-    val refPrint = if (withDedup) None else Some(Checks.fingerprint(ref))
-    ctx.phase("warm-up") {
-      drainOnce(ctx, in.dir, in.layout.perTrigger, new File(ctx.dir, "warm"), withDedup, in)
-      val small = new File(ctx.dir, "warm-input")
-      Fs.linkFirst(in.dir, small, WarmFiles)
-      drainOnce(ctx, small, 1, new File(ctx.dir, "warm-small"), withDedup, in)
+    (0 until WarmDrains).foreach { w =>
+      val runDir = new File(ctx.dir, s"warm$w")
+      ctx.phase(s"warm-up $w")(drainOnce(ctx, in.dir, in.layout.perTrigger, runDir, withDedup, in))
+      Fs.delete(runDir)
     }
     // Timed runs. A traced run alternates untraced and traced runs, so the
     // tracing overhead is measured at the same JIT warmth.
@@ -176,17 +175,23 @@ object Workloads {
         val i = reps.size
         val traced = ctx.args.trace && i % 2 == 1
         if (traced) ctx.listen() else ctx.unlisten()
+        System.gc() // every timed drain starts from the same heap
         val r = ctx.phase(s"drain $i") {
           ctx.span("run", s"$name-rep$i") {
             drainOnce(ctx, in.dir, in.layout.perTrigger, new File(ctx.dir, s"run$i"), withDedup, in)
           }
         }
         ctx.unlisten()
+        System.err.println("[perfbench] micro-batch ms (" + BatchPhases.mkString("/") + "): " +
+          r.progress.map(p => BatchPhases.map(k => Option(p.durationMs.get(k)).getOrElse(0L))
+            .mkString("/")).mkString(" "))
         timed += r.wallS
         reps += Rep(r, traced)
       }
-      // checks run after every timed run, so their cold code paths do not
-      // compete with a timed run
+      // the reference and the checks run after every timed run, so their
+      // cold code paths do not compete with a timed run
+      val ref = ctx.phase("reference")(reference(ctx, in))
+      val refPrint = if (withDedup) None else Some(Checks.fingerprint(ref))
       ctx.phase("check") {
         reps.foreach(r => Checks.drainRep(ctx, in, r.run, ref, refPrint, withDedup,
           reps.head.run.droppedLate))
