@@ -1,148 +1,68 @@
 package graft.sink
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.validate.ValidationPipeline
 
-/** Exactly-once three-way sink for `foreachBatch`.
+/** Exactly-once routed sink for `foreachBatch`.
   *
   * The reference emits to `valid_data` / `blacklists` / `webdata` via three
   * independent producers with NO transactional coupling — a blacklist send
   * failure is even swallowed (TopologyProducer.java:286-290); the north rule
-  * upgrades this to exactly-once. Protocol (the Iceberg-append contract
-  * rebuilt on plain parquet, SURVEY.md §7.6 — in prod these four writes
-  * become Iceberg appends with the same batchId manifest):
-  *
-  *  1. each output kind writes to `kind/batch_id=<id>/` (Hive-style
-  *     partition dir, so readers get `batch_id` for free) with
-  *     mode=overwrite → a torn write is repaired by the replay;
-  *  2. after ALL kinds land, a `_commits/<id>` marker is moved into place
-  *     atomically; a replayed batch (post-restart) sees the marker and
-  *     SKIPS — idempotent under Spark's at-least-once foreachBatch;
-  *  3. readers consult the manifest and ignore uncommitted partitions.
-  *
-  * At cluster scale the marker dir lives on the same object store as the
-  * table; one tiny file per micro-batch.
+  * upgrades this to exactly-once. Each micro-batch is ONE write: the
+  * decisions table, through the [[ManifestSink]] protocol (batch dir, then
+  * an atomically published `_commits/<id>` marker; a replay is a no-op).
+  * The routes are read-side views over the committed decisions, so one
+  * marker commits every route of the batch at once — the output is
+  * committed once per epoch, as in Flink's checkpointed sinks.
   */
 final class ExactlyOnceSink(outDir: String) extends Serializable {
 
-  private def commitMarker(batchId: Long) = Paths.get(s"$outDir/_commits/$batchId")
+  private val table = new ManifestSink(outDir)
 
-  def isCommitted(batchId: Long): Boolean = Files.exists(commitMarker(batchId))
-
-  def committedBatches(): Set[Long] = {
-    val d = Paths.get(s"$outDir/_commits")
-    if (!Files.exists(d)) Set.empty
-    else {
-      val s = Files.list(d)
-      try s.iterator().asInstanceOf[java.util.Iterator[java.nio.file.Path]]
-        .asScala.map(_.getFileName.toString.toLong).toSet
-      finally s.close()
-    }
-  }
-  private implicit class RichIt[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext = it.hasNext; def next() = it.next()
-    }
-  }
+  def committedBatches(): Set[Long] = table.committedBatches()
 
   /** Write one decision micro-batch. Safe to call twice with the same id.
     *
-    * EXACTLY ONE execution of the micro-batch plan: the canonical
-    * decisions table is written first (unsorted, dictionary off — see
-    * below), and every routed output derives from the WRITTEN file as a
-    * concurrent file-read job. A foreachBatch DataFrame re-executes its
-    * whole plan per action — including any upstream STATEFUL operator, so
-    * a second direct action would recompute the dedup state op and
-    * double-count its watermark-drop metrics. Persisting instead (round 1)
-    * cost more to fill (21 s) and read back (25 s) than the 9 s parquet
-    * write on a 16.8M-row batch; a decision-PARTITIONED single write pays
-    * a 16 s dynamic-partition sort of the full-text rows. Dictionary
-    * encoding is off for text-bearing files: high-entropy message text
-    * only burns CPU before the encoder falls back (15.1 s → 11.7 s).
+    * The write is the ONLY execution of the micro-batch plan — one Spark
+    * job. A foreachBatch DataFrame re-executes its whole plan per action,
+    * including any upstream STATEFUL operator, so a second action would
+    * recompute the dedup state op and double-count its watermark-drop
+    * metrics. `partition_id` records the writing partition for the
+    * per-partition metrics view. Dictionary encoding is off: high-entropy
+    * message text only burns CPU before the encoder falls back.
     */
-  def writeBatch(decisions: DataFrame, batchId: Long): Unit = {
-    if (isCommitted(batchId)) return // replay after restart → no-op
-    val spark = decisions.sparkSession
-    val dec = decisions.withColumn("partition_id", spark_partition_id())
-    val decDir = s"$outDir/decisions/batch_id=$batchId"
-    dec.write.mode("overwrite")
-      .option("parquet.enable.dictionary", "false")
-      .parquet(decDir) // the ONLY execution of the batch plan
-    // routed outputs from the written columnar file (valid re-reads the
-    // text; rejected/webdata/metrics read 2-6 narrow columns) — four
-    // independent file-scan jobs, safe to run concurrently
-    val written = spark.read.schema(dec.schema).parquet(decDir)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(Future.sequence(Seq(
-      Future(written.filter(col("decision") === "valid")
+  def writeBatch(decisions: DataFrame, batchId: Long): Unit =
+    table.publish(batchId) { dir =>
+      decisions.withColumn("partition_id", spark_partition_id())
         .write.mode("overwrite")
         .option("parquet.enable.dictionary", "false")
-        .parquet(s"$outDir/valid/batch_id=$batchId")),
-      Future(written.filter(col("decision") === "rejected")
-        .write.mode("overwrite")
-        .parquet(s"$outDir/rejected/batch_id=$batchId")),
-      Future(written
-        .select(col("conv_id"), col("turn_idx"), explode(col("webdata")).as("payload"))
-        .write.mode("overwrite").parquet(s"$outDir/webdata/batch_id=$batchId")),
-      // per-partition lineage + counts (north rule: per-partition metrics)
-      Future(written
-        .groupBy(col("partition_id"))
+        .parquet(dir)
+    }
+
+  /** Committed-only view of one output kind, each with `batch_id`:
+    *  - `decisions`: the written table (decision columns + `partition_id`);
+    *  - `valid` / `rejected` / `webdata`: [[ValidationPipeline.routes]];
+    *  - `metrics`: rows validated / rejected and the ts range per
+    *    (batch, partition) — per-partition lineage (north rule).
+    */
+  def read(spark: SparkSession, kind: String): DataFrame = {
+    val dec = table.read(spark)
+    if (dec.columns.isEmpty) return dec // nothing committed yet
+    lazy val (valid, rejected, webdata) = ValidationPipeline.routes(dec, "batch_id")
+    kind match {
+      case "decisions" => dec
+      case "valid" => valid
+      case "rejected" => rejected
+      case "webdata" => webdata
+      case "metrics" => dec.groupBy("batch_id", "partition_id")
         .agg(
           sum(when(col("decision") === "valid", 1L).otherwise(0L)).as("rows_validated"),
           sum(when(col("decision") === "rejected", 1L).otherwise(0L)).as("rows_rejected"),
           min("ts").as("ts_min"), max("ts").as("ts_max"))
-        .write.mode("overwrite").parquet(s"$outDir/metrics/batch_id=$batchId"))
-    )), Duration.Inf)
-    commit(batchId)
-  }
-
-  /** Atomic publish: write a temp file, then ATOMIC_MOVE into _commits. */
-  private def commit(batchId: Long): Unit = {
-    Files.createDirectories(Paths.get(s"$outDir/_commits"))
-    val tmp = Paths.get(s"$outDir/_commits/.tmp_$batchId")
-    Files.write(tmp, batchId.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, commitMarker(batchId), StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** Committed-only view of one output kind (valid/rejected/webdata/
-    * metrics). The route files carry the full decision schema; the reads
-    * project each route's contract columns (the reference's topic
-    * payloads) — parquet column pruning makes the projection free.
-    */
-  def read(spark: SparkSession, kind: String): DataFrame = {
-    val committed = committedBatches()
-    if (committed.isEmpty)
-      return spark.emptyDataFrame
-    // Exclude the UNCOMMITTED partitions, not include the committed ones:
-    // the committed set grows with stream LIFETIME (10^5 micro-batches =
-    // a 10^5-literal isin that blows up plan size and analysis time),
-    // while uncommitted = torn/in-flight batches — bounded by concurrent
-    // writers (usually 0–1) no matter how long the stream has run.
-    // batch_id is a directory-partition column either way, so the filter
-    // still prunes at file listing.
-    val present: Set[Long] = {
-      val d = new java.io.File(s"$outDir/$kind")
-      if (!d.exists()) Set.empty
-      else d.listFiles().iterator
-        .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-        .map(_.getName.stripPrefix("batch_id=").toLong).toSet
-    }
-    val uncommitted = present -- committed
-    if (present.isEmpty) return spark.emptyDataFrame
-    val base = spark.read.parquet(s"$outDir/$kind")
-    val df =
-      if (uncommitted.isEmpty) base
-      else base.filter(!col("batch_id").isin(uncommitted.toSeq: _*))
-    kind match {
-      case "valid" => df.select("conv_id", "turn_idx", "role", "tool",
-        "ts", "text", "reason", "promoted", "batch_id")
-      case "rejected" => df.select("conv_id", "turn_idx", "role", "tool",
-        "ts", "reason", "uuid", "batch_id")
-      case _ => df
+        .select("partition_id", "rows_validated", "rows_rejected", "ts_min", "ts_max",
+          "batch_id")
+      case other => throw new IllegalArgumentException(s"unknown sink output '$other'")
     }
   }
 }

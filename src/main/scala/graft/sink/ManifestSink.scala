@@ -1,16 +1,26 @@
 package graft.sink
 
+import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** Generic exactly-once parquet sink for arbitrary streaming frames —
-  * the same manifest protocol as [[ExactlyOnceSink]] (per-batch directory
-  * + atomically-published commit marker; a replayed batch after restart is
-  * a no-op; readers see committed batches only) without the
-  * validation-specific routing. Used by the streaming curation pipeline.
+/** Exactly-once parquet sink for `foreachBatch` — the manifest protocol
+  * (the Iceberg-append contract rebuilt on plain parquet, SURVEY.md §7.6):
+  *
+  *  1. a micro-batch lands in `data/batch_id=<id>/` (Hive-style partition
+  *     dir, so readers get `batch_id` for free) with mode=overwrite → a
+  *     torn write is repaired by the replay;
+  *  2. after the data lands, a `_commits/<id>` marker is moved into place
+  *     atomically; a replayed batch (post-restart) sees the marker and
+  *     SKIPS — idempotent under Spark's at-least-once foreachBatch;
+  *  3. readers consult the manifest and see committed batches only.
+  *
+  * Used as is by the curation, quality and ANN streams; [[ExactlyOnceSink]]
+  * adds the validation routes on top. At cluster scale the marker dir
+  * lives on the same object store as the table; one tiny file per batch.
   */
 final class ManifestSink(outDir: String) extends Serializable {
 
@@ -18,37 +28,44 @@ final class ManifestSink(outDir: String) extends Serializable {
 
   def isCommitted(batchId: Long): Boolean = Files.exists(marker(batchId))
 
-  /** Idempotent per-batch write: data lands under `data/batch_id=N`, the
-    * commit marker is published by ATOMIC_MOVE after the write completes —
-    * a torn write leaves files but no marker, and the replay overwrites.
+  /** Ids of the published markers. A `.tmp_<id>` left behind by a crash
+    * between the temp write and the move is not a marker.
     */
-  def writeBatch(df: DataFrame, batchId: Long): Unit = {
-    if (isCommitted(batchId)) return
-    df.write.mode("overwrite").parquet(s"$outDir/data/batch_id=$batchId")
+  def committedBatches(): Set[Long] = ids(new File(s"$outDir/_commits"), "")
+
+  private def ids(dir: File, prefix: String): Set[Long] = {
+    val Id = s"$prefix(\\d+)".r
+    Option(dir.list()).toSeq.flatten.collect { case Id(n) => n.toLong }.toSet
+  }
+
+  /** Idempotent per-batch publish: unless the batch is committed, `write`
+    * fills its directory (overwriting a torn attempt), then the commit
+    * marker is published by ATOMIC_MOVE — a crash mid-write leaves files
+    * but no marker, and the replay overwrites them.
+    */
+  def publish(batchId: Long)(write: String => Unit): Unit = {
+    if (isCommitted(batchId)) return // replay after restart → no-op
+    write(s"$outDir/data/batch_id=$batchId")
     Files.createDirectories(Paths.get(s"$outDir/_commits"))
     val tmp = Paths.get(s"$outDir/_commits/.tmp_$batchId")
     Files.write(tmp, batchId.toString.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, marker(batchId), StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** Committed-only view. Filters out the UNCOMMITTED partitions (bounded
-    * by in-flight writers) rather than isin-ing the committed set (which
-    * grows with stream lifetime — see ExactlyOnceSink.read).
+  def writeBatch(df: DataFrame, batchId: Long): Unit =
+    publish(batchId)(df.write.mode("overwrite").parquet(_))
+
+  /** Committed-only view, with a `batch_id` column. Filters out the
+    * UNCOMMITTED partitions rather than isin-ing the committed set: the
+    * committed set grows with stream LIFETIME (10^5 micro-batches = a
+    * 10^5-literal isin that blows up plan size and analysis time), while
+    * uncommitted = torn/in-flight batches, bounded by concurrent writers.
+    * `batch_id` is a directory-partition column, so the filter prunes at
+    * file listing.
     */
   def read(spark: SparkSession): DataFrame = {
-    val d = new java.io.File(s"$outDir/data")
-    if (!d.exists()) return spark.emptyDataFrame
-    val present = d.listFiles().iterator
-      .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-      .map(_.getName.stripPrefix("batch_id=").toLong).toSet
-    if (present.isEmpty) return spark.emptyDataFrame
-    val committed = {
-      val c = new java.io.File(s"$outDir/_commits")
-      if (!c.exists()) Set.empty[Long]
-      else c.listFiles().iterator.map(_.getName)
-        .filter(_.forall(_.isDigit)).map(_.toLong).toSet
-    }
-    val uncommitted = present -- committed
+    val present = ids(new File(s"$outDir/data"), "batch_id=") // committed or not
+    val uncommitted = present -- committedBatches()
     val committedPresent = present -- uncommitted
     if (committedPresent.isEmpty) return spark.emptyDataFrame
     // Schema comes from ONE committed batch dir, then is passed explicitly:

@@ -15,8 +15,10 @@ final case class DedupedTurn(
     ts: Timestamp,
     out_of_order: Boolean) // arrived with a lower turn_idx than already seen
 
-/** Per-conversation state kept while the conversation is open. */
-final case class ConvState(seen: Set[Int], maxTurn: Int, dups: Long)
+/** Per-conversation state kept while the conversation is open;
+  * `deadline` is the event-time timeout last set (ms).
+  */
+final case class ConvState(seen: Set[Int], maxTurn: Int, dups: Long, deadline: Long)
 
 /** conv_id-keyed stateful dedup + ordering (north rule: "per-conversation
   * answer-dedup and ordering state" via flatMapGroupsWithState).
@@ -59,7 +61,7 @@ object DedupState {
             state.remove()
             Iterator.empty
           } else {
-            var s = state.getOption.getOrElse(ConvState(Set.empty, -1, 0L))
+            var s = state.getOption.getOrElse(ConvState(Set.empty, -1, 0L, Long.MinValue))
             var maxTs = Long.MinValue
             val out = rows.flatMap { t =>
               if (t.ts != null) maxTs = math.max(maxTs, t.ts.getTime)
@@ -68,11 +70,10 @@ object DedupState {
                 None
               } else {
                 val ooo = t.turn_idx < s.maxTurn
-                s = ConvState(s.seen + t.turn_idx, math.max(s.maxTurn, t.turn_idx), s.dups)
+                s = s.copy(seen = s.seen + t.turn_idx, maxTurn = math.max(s.maxTurn, t.turn_idx))
                 Some(DedupedTurn(t.conv_id, t.turn_idx, t.role, t.text, t.tool, t.ts, ooo))
               }
             }.toVector // drain before updating state
-            state.update(s)
             // close the conversation `gap` after its newest event time.
             // CLAMP to watermark+1: one micro-batch can span far more
             // event time than `gap` (a backfill/availableNow batch over
@@ -80,14 +81,17 @@ object DedupState {
             // time may already be behind the batch-end watermark — Spark
             // rejects such a timestamp; watermark+1 expires it at the
             // next batch, which is the same semantics (already closed).
-            if (maxTs != Long.MinValue)
-              state.setTimeoutTimestamp(
-                math.max(maxTs + gapMs, state.getCurrentWatermarkMs() + 1))
-            else
-              // all-null-ts batch: still set a closure deadline (state
-              // would otherwise be retained forever — advisor finding)
-              state.setTimeoutTimestamp(
-                state.getCurrentWatermarkMs() + math.max(gapMs, 1L))
+            // An all-null-ts batch still sets a deadline (state would
+            // otherwise be retained forever). The deadline never moves
+            // earlier: an older or all-null-ts batch must not close a
+            // conversation before its newest event time + gap.
+            val wm = state.getCurrentWatermarkMs()
+            val next =
+              if (maxTs != Long.MinValue) math.max(maxTs + gapMs, wm + 1)
+              else wm + math.max(gapMs, 1L)
+            s = s.copy(deadline = math.max(s.deadline, next))
+            state.update(s)
+            state.setTimeoutTimestamp(s.deadline)
             out.iterator
           }
       }

@@ -10,7 +10,8 @@ import graft.validate.ValidationPipeline
 
 /** The streaming topology: `readStream(transcripts) → dedup state →
   * validate (same stages as batch — parity by construction) →
-  * foreachBatch exactly-once 3-way sink` (SURVEY.md §3.1 Spark equivalent).
+  * foreachBatch exactly-once sink` (SURVEY.md §3.1 Spark equivalent): one
+  * decisions write per micro-batch, read back as the three routes.
   *
   * Source is a schema'd parquet-dir file stream (the local stand-in for
   * the Iceberg streaming source — no Iceberg jars offline, SURVEY.md §7.6;
@@ -24,7 +25,7 @@ import graft.validate.ValidationPipeline
   * `spark.sql.shuffle.partitions`; a hot conversation lands on one
   * partition but its cost is a Set lookup per row, so skew shows up only
   * if one conversation dominates the whole stream volume — tracked by the
-  * per-partition metrics table.
+  * sink's per-partition `metrics` view.
   */
 object StreamValidate {
 

@@ -92,15 +92,17 @@ object ValidationPipeline {
   }
 
   /** The three routed outputs of one decision frame (topics `valid_data`,
-    * `blacklists`, `webdata` — TP:137, TP:286, TP:223).
+    * `blacklists`, `webdata` — TP:137, TP:286, TP:223). `carry` columns
+    * (e.g. the sink's `batch_id`) follow each route's own columns.
     */
-  def routes(decisions: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+  def routes(decisions: DataFrame, carry: String*): (DataFrame, DataFrame, DataFrame) = {
+    def pick(names: String*) = (names ++ carry).map(col)
     val valid = decisions.filter(col("decision") === "valid")
-      .select("conv_id", "turn_idx", "role", "tool", "ts", "text", "reason", "promoted")
+      .select(pick("conv_id", "turn_idx", "role", "tool", "ts", "text", "reason", "promoted"): _*)
     val rejected = decisions.filter(col("decision") === "rejected")
-      .select("conv_id", "turn_idx", "role", "tool", "ts", "reason", "uuid")
-    val webdata = decisions
-      .select(col("conv_id"), col("turn_idx"), explode(col("webdata")).as("payload"))
+      .select(pick("conv_id", "turn_idx", "role", "tool", "ts", "reason", "uuid"): _*)
+    val webdata = decisions.select(col("conv_id") +: col("turn_idx") +:
+      explode(col("webdata")).as("payload") +: carry.map(col): _*)
     (valid, rejected, webdata)
   }
 }

@@ -1,7 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.fixtures.TranscriptGen
@@ -168,13 +172,104 @@ class StreamingSpec extends SparkSpec {
     sink.writeBatch(dec, 7L) // replay
     assert(sink.read(spark, "valid").count() == n1)
 
-    // torn write: data landed for batch 8 but no commit marker
+    // torn write: decisions landed for batch 8 but no commit marker
     dec.limit(3).withColumn("partition_id", spark_partition_id())
-      .write.mode("overwrite").parquet(s"$out/valid/batch_id=8")
+      .write.mode("overwrite").parquet(s"$out/data/batch_id=8")
     assert(sink.read(spark, "valid").count() == n1, "uncommitted batch visible")
     sink.writeBatch(dec, 8L) // repair overwrites the torn partition
     assert(sink.read(spark, "valid").filter($"batch_id" === 8).count() ==
       dec.filter($"decision" === "valid").count())
+  }
+
+  /** Commits one batch, leaves `debris` in the sink dir, and checks that
+    * every read kind still returns the same rows.
+    */
+  private def readsIgnore(tag: String)(debris: String => Unit): ExactlyOnceSink = {
+    val out = tmp(tag)
+    val sink = new ExactlyOnceSink(out)
+    sink.writeBatch(ValidationPipeline.decide(spark,
+      TranscriptGen.turnsDs(spark, 5, 10, 0).toDF(), TranscriptGen.catalog).toDF(), 1L)
+    val kinds = Seq("decisions", "valid", "rejected", "webdata", "metrics")
+    val want = kinds.map(k => k -> sink.read(spark, k).count())
+    debris(out)
+    assert(kinds.map(k => k -> sink.read(spark, k).count()) == want)
+    sink
+  }
+
+  test("sink reads skip a torn non-parquet file in an uncommitted batch dir") {
+    readsIgnore("out_torn") { out =>
+      // batch 0's dir lists first, so schema inference over all of data/
+      // would read this footer
+      val torn = Paths.get(s"$out/data/batch_id=0/part-00000-torn.parquet")
+      Files.createDirectories(torn.getParent)
+      Files.write(torn, "not a parquet file".getBytes(UTF_8))
+    }
+  }
+
+  test("sink reads ignore a temp marker left by a crash mid-publish") {
+    // the crash fell between the temp-marker write and its ATOMIC_MOVE
+    val sink = readsIgnore("out_tmpmark")(out =>
+      Files.write(Paths.get(s"$out/_commits/.tmp_2"), "2".getBytes(UTF_8)))
+    assert(sink.committedBatches() == Set(1L))
+  }
+
+  /** Spark jobs started while `f` runs, on any thread, counted by a
+    * SparkListener between two marker jobs: the listener bus delivers job
+    * starts in order, so the end marker arrives after every job `f` ran.
+    */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val starts = new LinkedBlockingQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.put(
+        Option(e.properties).flatMap(p => Option(p.getProperty("graft.marker"))).getOrElse("job"))
+    }
+    def marker(name: String): Unit = {
+      sc.setLocalProperty("graft.marker", name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.marker", null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("begin"); f; marker("end")
+      var jobs = -1
+      var e = ""
+      while ({
+        e = starts.poll(60, TimeUnit.SECONDS)
+        assert(e != null, "listener bus not flushed")
+        e != "end"
+      }) jobs = if (e == "begin") 0 else if (jobs >= 0) jobs + 1 else jobs
+      jobs
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("sink: one job per batch, none on replay; reads equal the routes and per-partition metrics") {
+    val out = tmp("out_views")
+    val sink = new ExactlyOnceSink(out)
+    val frame = ValidationPipeline.decide(spark,
+      TranscriptGen.turnsDs(spark, 20, 10, 0).toDF(), TranscriptGen.catalog).toDF()
+      .repartition(3).localCheckpoint()
+    assert(jobsOf(sink.writeBatch(frame, 5L)) == 1)
+    assert(jobsOf(sink.writeBatch(frame, 5L)) == 0) // replay
+    def same(got: DataFrame, want: DataFrame, what: String): Unit = {
+      assert(got.columns.toSeq == want.columns.toSeq, what)
+      assert(got.count() == want.count() && got.exceptAll(want).isEmpty &&
+        want.exceptAll(got).isEmpty, what)
+    }
+    val (valid, rejected, webdata) = ValidationPipeline.routes(frame)
+    assert(valid.count() > 0 && rejected.count() > 0 && webdata.count() > 0)
+    same(sink.read(spark, "valid").drop("batch_id"), valid, "valid")
+    same(sink.read(spark, "rejected").drop("batch_id"), rejected, "rejected")
+    same(sink.read(spark, "webdata").drop("batch_id"), webdata, "webdata")
+    // the per-(batch, partition) aggregate the sink used to write as a table
+    val metrics = frame.withColumn("partition_id", spark_partition_id())
+      .groupBy(col("partition_id"))
+      .agg(
+        sum(when(col("decision") === "valid", 1L).otherwise(0L)).as("rows_validated"),
+        sum(when(col("decision") === "rejected", 1L).otherwise(0L)).as("rows_rejected"),
+        min("ts").as("ts_min"), max("ts").as("ts_max"))
+      .withColumn("batch_id", lit(5L))
+    assert(metrics.count() == 3)
+    same(sink.read(spark, "metrics"), metrics, "metrics")
   }
 
   // ------------------------------------------------------------ dedup state
@@ -198,6 +293,34 @@ class StreamingSpec extends SparkSpec {
     q.stop()
     assert(rows.map(_._2).toSeq == Seq(0, 1, 2, 3), s"got ${rows.toSeq}")
     assert(rows.count(_._3) == 1 && rows.find(_._3).get._2 == 2)
+  }
+
+  test("stateful dedup: an all-null-ts batch does not pull the close deadline earlier") {
+    // regression: real-ts turn (deadline ts+gap), then a null-ts turn of the
+    // same conversation; the watermark then passes watermark+gap but not
+    // ts+gap — the conversation must stay open and suppress the replay
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[Turn]
+    val q = DedupState.dedup(spark, mem.toDS(), "1 minute", "5 minutes")
+      .writeStream.outputMode("append").format("memory")
+      .queryName("dedup_null_ts").start()
+    def t(c: String, i: Int, sec: Option[Long]) =
+      Turn(c, i, "user", s"m$i", null, sec.map(ts).orNull)
+    mem.addData(t("N1", 0, Some(0))) // deadline 300 s
+    q.processAllAvailable()
+    mem.addData(t("N1", 1, None)) // watermark -60 s: fallback 240 s
+    q.processAllAvailable()
+    mem.addData(t("OTHER", 0, Some(310))) // watermark -> 250 s
+    q.processAllAvailable()
+    mem.addData(t("OTHER", 1, Some(311))) // timeouts run at watermark 250 s
+    q.processAllAvailable()
+    mem.addData(t("N1", 0, None)) // replay of N1/0
+    q.processAllAvailable()
+    q.stop()
+    val rows = spark.table("dedup_null_ts").select("conv_id", "turn_idx")
+      .as[(String, Int)].collect().toSeq.sorted
+    assert(rows == Seq(("N1", 0), ("N1", 1), ("OTHER", 0), ("OTHER", 1)), rows)
   }
 
   test("stateful dedup survives a batch spanning far more event time than the gap") {
