@@ -400,7 +400,7 @@ object Bench {
     }
     // ---- phase 3: streaming end-to-end (source → validate → exactly-once
     // 3-way sink) turns/sec. Stateless and stateful (conv_id-keyed
-    // flatMapGroupsWithState on RocksDB) phases run INTERLEAVED, two
+    // dedup state on RocksDB) phases run INTERLEAVED, two
     // samples each (SL,SF,SL,SF) and each reports its best — same noise
     // protocol as scaling, so a single host CPU-steal spike cannot poison
     // one phase end-to-end (round 2 recorded stateless at half its

@@ -1,8 +1,8 @@
 package graft.streaming
 
+import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.ops.{Cep, CepMatch}
 
 /** Buffered turns of one open conversation (unordered arrival). */
@@ -10,9 +10,9 @@ final case class CepConvState(rows: Vector[(Int, Long, String)])
 
 /** Streaming CEP: the event-time twin of [[graft.ops.Cep]]. Turns are
   * symbolized with the SAME codegen'd rule column, buffered per
-  * conversation in flatMapGroupsWithState, and when the watermark closes
-  * the conversation (event-time timeout `gap` after its newest event —
-  * the session-window contract), the buffer is sorted by turn_idx and run
+  * conversation in keyed state, and when the watermark closes the
+  * conversation ([[EventTimeState]]: `gap` after its newest event — the
+  * session-window contract), the buffer is sorted by turn_idx and run
   * through the SAME [[Cep.matchConv]] kernel. Emission strictly at close
   * keeps the operator exactly-once in append mode: a pattern can never
   * emit early and then be invalidated by a late out-of-order turn,
@@ -31,54 +31,22 @@ object StreamCep {
       watermark: String = "10 minutes", gap: String = "30 minutes"): Dataset[CepMatch] = {
     val spark = turns.sparkSession
     import spark.implicits._
-    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
-      org.apache.spark.unsafe.types.UTF8String.fromString(gap))
-    require(iv.months == 0,
-      s"CEP gap must be day/time-based, got month-bearing interval '$gap'")
-    val gapMs = iv.days * 86400000L + iv.microseconds / 1000L
-    val compiled = pattern
-    turns
+    val grouped = turns
       .withWatermark("ts", watermark)
       .select(col("conv_id"),
         col("turn_idx").cast("int").as("turn_idx"),
         col("ts"),
         coalesce(col("ts").cast("long"), lit(0L)).as("ts_sec"),
         Cep.symbolize(rules).as("s"))
-      .as[(String, Int, java.sql.Timestamp, Long, String)]
+      .as[(String, Int, Timestamp, Long, String)]
       .groupByKey(_._1)
-      .flatMapGroupsWithState[CepConvState, CepMatch](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (conv: String, rows: Iterator[(String, Int, java.sql.Timestamp, Long, String)],
-            state: GroupState[CepConvState]) =>
-          if (state.hasTimedOut) {
-            // conversation closed by the watermark: match once, free state
-            val buf = state.get.rows.sortBy(_._1)
-            state.remove()
-            val pat = java.util.regex.Pattern.compile(compiled)
-            Cep.matchConv(conv, buf, pat).iterator
-          } else {
-            var s = state.getOption.getOrElse(CepConvState(Vector.empty))
-            var maxTs = Long.MinValue
-            rows.foreach { r =>
-              if (r._3 != null) maxTs = math.max(maxTs, r._3.getTime)
-              s = CepConvState(s.rows :+ ((r._2, r._4, r._5)))
-            }
-            state.update(s)
-            // close `gap` after the newest event; clamp to watermark+1 so
-            // a backfill batch spanning more event time than `gap` still
-            // expires the conversation next batch (same as DedupState)
-            if (maxTs != Long.MinValue)
-              state.setTimeoutTimestamp(
-                math.max(maxTs + gapMs, state.getCurrentWatermarkMs() + 1))
-            else
-              // a batch whose rows ALL carry null event-time must still
-              // set a closure deadline, or the group's state is retained
-              // forever (round-5 advisor finding)
-              state.setTimeoutTimestamp(
-                state.getCurrentWatermarkMs() + math.max(gapMs, 1L))
-            Iterator.empty
-          }
-      }
+    EventTimeState.closing(grouped, gap, (r: (String, Int, Timestamp, Long, String)) => r._3)(
+      (_, rows, prev: Option[CepConvState]) =>
+        (CepConvState(prev.fold(Vector.empty[(Int, Long, String)])(_.rows) ++
+          rows.map(r => (r._2, r._4, r._5))), Seq.empty[CepMatch]),
+      // closed by the watermark: match the sorted buffer once
+      Some((conv: String, s: CepConvState) => Cep.matchConv(conv, s.rows.sortBy(_._1),
+        java.util.regex.Pattern.compile(pattern)).iterator))
   }
 
   /** The transcript instantiation, streaming twin of [[Cep.searchRuns]]. */

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.sink.ManifestSink
 
 /** One lane row per (doc, lane): lane -1 = exact-digest, 0..bands-1 =
@@ -34,8 +34,8 @@ final case class CurBucketState(members: List[CurMember], saturated: Boolean)
   * per-document collapse (`any lane dropped?`) happens in `foreachBatch` —
   * BATCH-LOCAL, because all of a document's lane verdicts are emitted in
   * the micro-batch it arrives in. That keeps the plan at ONE stateful
-  * operator (no fMGWS-after-fMGWS chain for the correctness checker to
-  * reject) while state still spans micro-batches.
+  * operator (no stateful-after-stateful chain for the correctness checker
+  * to reject) while state still spans micro-batches.
   *
   * Precedence: a document is dropped when an EARLIER-ARRIVED document is
   * an exact or near duplicate — arrival order is the streaming analogue of
@@ -50,10 +50,11 @@ final case class CurBucketState(members: List[CurMember], saturated: Boolean)
   * that matched a member before the bucket crossed the cap stay dropped.
   *
   * State law (same as [[StreamDedup]]): bounded by ACTIVE buckets x
-  * maxBucket signatures, saturation frees members prospectively,
-  * event-time closure after `gap`. Dropped documents still join bucket
-  * state — the batch pair set also contains pairs involving dropped docs,
-  * and a dropped doc must keep suppressing its later copies.
+  * maxBucket signatures, saturation frees members prospectively, and a
+  * bucket closes `gap` after its newest event ([[EventTimeState]]).
+  * Dropped documents still join bucket state — the batch pair set also
+  * contains pairs involving dropped docs, and a dropped doc must keep
+  * suppressing its later copies.
   */
 object StreamCuration {
 
@@ -81,12 +82,6 @@ object StreamCuration {
     import spark.implicits._
     require(cfg.numHashes % cfg.bands == 0, "bands must divide numHashes")
     val r = cfg.numHashes / cfg.bands
-    val gapMs = {
-      val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
-        org.apache.spark.unsafe.types.UTF8String.fromString(cfg.gap))
-      require(iv.months == 0, s"gap must be day/time-based: '${cfg.gap}'")
-      iv.days * 86400000L + iv.microseconds / 1000L
-    }
     // same normalization as Dedup.exact — the exact-digest lane must
     // reproduce the batch duplicate groups bit-for-bit
     val norm = trim(regexp_replace(lower(trim(col("text"))), "\\s+", " "))
@@ -121,55 +116,37 @@ object StreamCuration {
     val numHashes = cfg.numHashes
     val threshold = cfg.threshold
     val maxBucket = cfg.maxBucket
-    lanes
-      .groupByKey(l => (l.band, l.bucket))
-      .flatMapGroupsWithState[CurBucketState, CurVerdict](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: (Int, String), rows: Iterator[CurLane], state: GroupState[CurBucketState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var s = state.getOption.getOrElse(CurBucketState(Nil, saturated = false))
-            var maxTs = Long.MinValue
-            val out = Vector.newBuilder[CurVerdict]
-            // id-order within the batch = the batch keep-smallest rule
-            rows.toVector.sortBy(_.doc_id).foreach { d =>
-              if (d.ts != null) maxTs = math.max(maxTs, d.ts.getTime)
-              if (!s.members.exists(_.doc_id == d.doc_id)) {
-                val dropped =
-                  if (s.saturated) false // capped bucket votes keep (batch: excluded)
-                  else if (key._1 == -1) s.members.nonEmpty // exact dup of an earlier doc
-                  else s.members.exists { m =>
-                    var eq = 0
-                    var i = 0
-                    while (i < numHashes) { if (m.sig(i) == d.sig(i)) eq += 1; i += 1 }
-                    eq.toDouble / numHashes >= threshold
-                  }
-                out += CurVerdict(d.doc_id, key._1, dropped, d.lang_pred,
-                  d.ws_tokens, d.ts)
-                s =
-                  if (key._1 == -1)
-                    // the exact lane only needs "seen": one sentinel member
-                    if (s.members.isEmpty) CurBucketState(CurMember(d.doc_id, Nil) :: Nil, false)
-                    else s
-                  else if (s.saturated) s
-                  else if (s.members.length + 1 >= maxBucket)
-                    CurBucketState(Nil, saturated = true) // free memory
-                  else CurBucketState(CurMember(d.doc_id, d.sig) :: s.members, false)
-              }
+    EventTimeState.closing(lanes.groupByKey(l => (l.band, l.bucket)), cfg.gap,
+        (l: CurLane) => l.ts) { (key, rows, prev: Option[CurBucketState]) =>
+      var s = prev.getOrElse(CurBucketState(Nil, saturated = false))
+      val out = Vector.newBuilder[CurVerdict]
+      // id-order within the batch = the batch keep-smallest rule
+      rows.toVector.sortBy(_.doc_id).foreach { d =>
+        if (!s.members.exists(_.doc_id == d.doc_id)) {
+          val dropped =
+            if (s.saturated) false // capped bucket votes keep (batch: excluded)
+            else if (key._1 == -1) s.members.nonEmpty // exact dup of an earlier doc
+            else s.members.exists { m =>
+              var eq = 0
+              var i = 0
+              while (i < numHashes) { if (m.sig(i) == d.sig(i)) eq += 1; i += 1 }
+              eq.toDouble / numHashes >= threshold
             }
-            state.update(s)
-            if (maxTs != Long.MinValue)
-              state.setTimeoutTimestamp(
-                math.max(maxTs + gapMs, state.getCurrentWatermarkMs() + 1))
-            else
-              // all-null-ts batch: still set a closure deadline so the
-              // bucket's state cannot be retained forever (round-5
-              // advisor finding)
-              state.setTimeoutTimestamp(
-                state.getCurrentWatermarkMs() + math.max(gapMs, 1L))
-            out.result().iterator
-          }
+          out += CurVerdict(d.doc_id, key._1, dropped, d.lang_pred,
+            d.ws_tokens, d.ts)
+          s =
+            if (key._1 == -1)
+              // the exact lane only needs "seen": one sentinel member
+              if (s.members.isEmpty) CurBucketState(CurMember(d.doc_id, Nil) :: Nil, false)
+              else s
+            else if (s.saturated) s
+            else if (s.members.length + 1 >= maxBucket)
+              CurBucketState(Nil, saturated = true) // free memory
+            else CurBucketState(CurMember(d.doc_id, d.sig) :: s.members, false)
+        }
       }
+      (s, out.result())
+    }
   }
 
   /** Batch-local collapse of lane verdicts + the language/length gate —

@@ -4,7 +4,6 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One banded signature row flowing into a bucket's state. */
 final case class BandedDoc(
@@ -39,10 +38,10 @@ final case class NearDupPair(doc_a: Long, doc_b: Long, est_jaccard: Double,
   * `minhash_sig` expression as batch); the only exchange is the one Spark
   * inserts for the (band, bucket)-keyed state — exactly the batch plan's
   * band-bucket shuffle, amortized over arrival. State per bucket is
-  * <= maxBucket signatures and buckets close by EVENT-TIME timeout `gap`
-  * after their newest arrival, so state is bounded by ACTIVE buckets, not
-  * stream length (same law as DedupState). Cross-band duplicate pair
-  * emissions are at-least-once by default; see `collapsePairs`.
+  * <= maxBucket signatures and buckets close `gap` after their newest
+  * event ([[EventTimeState]]), so state is bounded by ACTIVE buckets, not
+  * stream length. Cross-band duplicate pair emissions are at-least-once
+  * by default; see `collapsePairs`.
   *
   * Cap semantics vs batch: the batch operator drops an over-`maxBucket`
   * bucket RETROACTIVELY (it sees the full corpus); a stream cannot, so a
@@ -73,11 +72,6 @@ object StreamDedup {
     import spark.implicits._
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
-    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
-      org.apache.spark.unsafe.types.UTF8String.fromString(gap))
-    require(iv.months == 0,
-      s"bucket gap must be day/time-based, got month-bearing interval '$gap'")
-    val gapMs = iv.days * 86400000L + iv.microseconds / 1000L
 
     val sigs = docs
       .withColumn("sig", graft.functions.SketchExpr.minhash_sig(
@@ -90,50 +84,32 @@ object StreamDedup {
       .withWatermark("ts", watermark)
       .as[BandedDoc]
 
-    val pairs = banded
-      .groupByKey(d => (d.band, d.bucket))
-      .flatMapGroupsWithState[BucketState, NearDupPair](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: (Int, Long), rows: Iterator[BandedDoc], state: GroupState[BucketState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var s = state.getOption.getOrElse(BucketState(Nil, saturated = false))
-            var maxTs = Long.MinValue
-            val out = Vector.newBuilder[NearDupPair]
-            rows.foreach { d =>
-              if (d.ts != null) maxTs = math.max(maxTs, d.ts.getTime)
-              if (!s.saturated && !s.members.exists(_.doc_id == d.doc_id)) {
-                s.members.foreach { m =>
-                  var eq = 0
-                  var i = 0
-                  while (i < numHashes) {
-                    if (m.sig(i) == d.sig(i)) eq += 1
-                    i += 1
-                  }
-                  val est = eq.toDouble / numHashes
-                  if (est >= threshold)
-                    out += NearDupPair(math.min(m.doc_id, d.doc_id),
-                      math.max(m.doc_id, d.doc_id), est, d.ts)
-                }
-                s =
-                  if (s.members.length + 1 >= maxBucket)
-                    BucketState(Nil, saturated = true) // free memory, stop emitting
-                  else BucketState(BucketMember(d.doc_id, d.sig) :: s.members, false)
-              }
+    val pairs = EventTimeState.closing(banded.groupByKey(d => (d.band, d.bucket)), gap,
+        (d: BandedDoc) => d.ts) { (_, rows, prev: Option[BucketState]) =>
+      var s = prev.getOrElse(BucketState(Nil, saturated = false))
+      val out = Vector.newBuilder[NearDupPair]
+      rows.foreach { d =>
+        if (!s.saturated && !s.members.exists(_.doc_id == d.doc_id)) {
+          s.members.foreach { m =>
+            var eq = 0
+            var i = 0
+            while (i < numHashes) {
+              if (m.sig(i) == d.sig(i)) eq += 1
+              i += 1
             }
-            state.update(s)
-            if (maxTs != Long.MinValue) {
-              val closeAt = math.max(maxTs + gapMs,
-                state.getCurrentWatermarkMs() + 1)
-              state.setTimeoutTimestamp(closeAt)
-            } else
-              // all-null-ts batch: still set a closure deadline (state
-              // would otherwise be retained forever — advisor finding)
-              state.setTimeoutTimestamp(
-                state.getCurrentWatermarkMs() + math.max(gapMs, 1L))
-            out.result().iterator
+            val est = eq.toDouble / numHashes
+            if (est >= threshold)
+              out += NearDupPair(math.min(m.doc_id, d.doc_id),
+                math.max(m.doc_id, d.doc_id), est, d.ts)
           }
+          s =
+            if (s.members.length + 1 >= maxBucket)
+              BucketState(Nil, saturated = true) // free memory, stop emitting
+            else BucketState(BucketMember(d.doc_id, d.sig) :: s.members, false)
+        }
       }
+      (s, out.result())
+    }
     if (!collapsePairs) pairs
     else pairs.withWatermark("ts", watermark) // new event-time lineage
       .dropDuplicatesWithinWatermark("doc_a", "doc_b")
@@ -173,11 +149,6 @@ object StreamDedup {
     require(planes <= 63, "hyperplane codes are a single long")
     val width = planes / bands
     val mask = (1L << width) - 1
-    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
-      org.apache.spark.unsafe.types.UTF8String.fromString(gap))
-    require(iv.months == 0,
-      s"bucket gap must be day/time-based, got month-bearing interval '$gap'")
-    val gapMs = iv.days * 86400000L + iv.microseconds / 1000L
 
     val coded = emb
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"), col("ts"))
@@ -200,41 +171,26 @@ object StreamDedup {
       dotAB / (math.sqrt(dotAA) * math.sqrt(dotBB))
     }
 
-    val pairs = banded
-      .groupByKey(d => (d.band, d.bucket))
-      .flatMapGroupsWithState[VecBucketState, VecNearDupPair](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: (Int, Long), rows: Iterator[BandedVec], state: GroupState[VecBucketState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var s = state.getOption.getOrElse(VecBucketState(Nil, saturated = false))
-            var maxTs = Long.MinValue
-            val out = Vector.newBuilder[VecNearDupPair]
-            rows.foreach { d =>
-              if (d.ts != null) maxTs = math.max(maxTs, d.ts.getTime)
-              if (!s.saturated && !s.members.exists(_.vec_id == d.vec_id)) {
-                s.members.foreach { m =>
-                  val c = cosSeq(m.v, d.v)
-                  if (c >= threshold)
-                    out += VecNearDupPair(math.min(m.vec_id, d.vec_id),
-                      math.max(m.vec_id, d.vec_id), c, d.ts)
-                }
-                s =
-                  if (s.members.length + 1 >= maxBucket)
-                    VecBucketState(Nil, saturated = true)
-                  else VecBucketState(VecMember(d.vec_id, d.v) :: s.members, false)
-              }
-            }
-            state.update(s)
-            if (maxTs != Long.MinValue)
-              state.setTimeoutTimestamp(
-                math.max(maxTs + gapMs, state.getCurrentWatermarkMs() + 1))
-            else
-              state.setTimeoutTimestamp(
-                state.getCurrentWatermarkMs() + math.max(gapMs, 1L))
-            out.result().iterator
+    val pairs = EventTimeState.closing(banded.groupByKey(d => (d.band, d.bucket)), gap,
+        (d: BandedVec) => d.ts) { (_, rows, prev: Option[VecBucketState]) =>
+      var s = prev.getOrElse(VecBucketState(Nil, saturated = false))
+      val out = Vector.newBuilder[VecNearDupPair]
+      rows.foreach { d =>
+        if (!s.saturated && !s.members.exists(_.vec_id == d.vec_id)) {
+          s.members.foreach { m =>
+            val c = cosSeq(m.v, d.v)
+            if (c >= threshold)
+              out += VecNearDupPair(math.min(m.vec_id, d.vec_id),
+                math.max(m.vec_id, d.vec_id), c, d.ts)
           }
+          s =
+            if (s.members.length + 1 >= maxBucket)
+              VecBucketState(Nil, saturated = true)
+            else VecBucketState(VecMember(d.vec_id, d.v) :: s.members, false)
+        }
       }
+      (s, out.result())
+    }
     if (!collapsePairs) pairs
     else pairs.withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("vec_a", "vec_b")

@@ -35,10 +35,6 @@ object StreamValidate {
     *   (TopologyProducer.java:196-208) at micro-batch granularity. When
     *   None, the catalog passed to [[start]] is broadcast once (the
     *   immutable-catalog fast path).
-    * @param relational validate with the relational (join-based)
-    *   formulation instead of the fused typed map — only meaningful with
-    *   `catalogDir` (the refresh path revalidates inside `foreachBatch`,
-    *   where either formulation runs on the batch frame).
     */
   final case class Config(
       inputDir: String,
@@ -49,8 +45,7 @@ object StreamValidate {
       watermark: String = "10 minutes",
       maxFilesPerTrigger: Int = 4,
       availableNow: Boolean = false,
-      catalogDir: Option[String] = None,
-      relational: Boolean = false)
+      catalogDir: Option[String] = None)
 
   /** Source + optional conv_id-keyed dedup state — the streaming stages
     * that must live in the stream plan (state, watermark). Validation is
@@ -87,17 +82,9 @@ object StreamValidate {
           // Refresh mode: the stream plan carries only source+state; the
           // catalog is re-read and re-broadcast per micro-batch, so a dim
           // row added mid-stream is honored by the NEXT batch (tested).
-          (turnsStream(spark, cfg), (df: DataFrame, id: Long) => {
-            val decided =
-              if (cfg.relational) {
-                val (e, d, a) = graft.model.CatalogIO.frames(spark, dir)
-                graft.validate.RelationalValidation
-                  .decide(spark, df, e, d, a, cfg.enableBlacklist)
-              } else
-                ValidationPipeline.decideFast(spark, df,
-                  graft.model.CatalogIO.load(spark, dir), cfg.enableBlacklist).toDF()
-            sink.writeBatch(decided, id)
-          })
+          (turnsStream(spark, cfg), (df: DataFrame, id: Long) =>
+            sink.writeBatch(ValidationPipeline.decideFast(spark, df,
+              graft.model.CatalogIO.load(spark, dir), cfg.enableBlacklist).toDF(), id))
       }
     frame.writeStream
       .option("checkpointLocation", cfg.checkpointDir)

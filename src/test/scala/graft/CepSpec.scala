@@ -131,4 +131,33 @@ class CepSpec extends SparkSpec {
         Seq(("C1", 0, 5)))
     } finally q.stop()
   }
+
+  test("streaming: an all-null-ts batch does not close the conversation early") {
+    // regression: C1's deadline is 2 s + gap = 302 s; its null-ts turn
+    // arrives at watermark -58 s. The watermark then reaches 251 s, past
+    // watermark + gap but not 302 s, so C1 must stay open and match its
+    // six turns once, not close early and split them
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[Turn]
+    def t(c: String, i: Int, role: String, sec: Option[Long], tool: String = null) =
+      Turn(c, i, role, "x", tool, sec.map(ts).orNull)
+    val q = StreamCep.searchRuns(mem.toDS().toDF(),
+      watermark = "1 minute", gap = "5 minutes")
+      .writeStream.outputMode("append").format("memory")
+      .queryName("cep_null_ts").start()
+    try {
+      Seq(Seq(t("C1", 0, "user", Some(0)), t("C1", 1, "agent", Some(1)),
+            t("C1", 2, "tool", Some(2), "search")),
+          Seq(t("C1", 3, "user", None)),
+          Seq(t("OTHER", 0, "user", Some(310))),
+          Seq(t("OTHER", 1, "user", Some(311))),
+          Seq(t("C1", 4, "agent", None), t("C1", 5, "tool", None, "search")),
+          Seq(Turn("ZZZ_FLUSH", 0, "user", "x", null, ts(10_000L))))
+        .foreach { batch => mem.addData(batch: _*); q.processAllAvailable() }
+      val rows = spark.table("cep_null_ts").as[CepMatch].collect()
+      assert(rows.map(m => (m.conv_id, m.start_turn_idx, m.end_turn_idx)).toSeq ==
+        Seq(("C1", 0, 5)), rows.mkString(","))
+    } finally q.stop()
+  }
 }

@@ -11,19 +11,25 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class DocSyncSpec extends AnyFunSuite {
 
+  // paths are relative to the working directory: the repo root under sbt
   private def readFile(p: String): String =
     new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
 
-  private val recordPath: String = {
-    val dir = new java.io.File("/root/repo/BENCH")
-    val recs = dir.listFiles().map(_.getName)
+  private lazy val bench: java.io.File = {
+    val dir = new java.io.File("BENCH")
+    if (!dir.isDirectory) fail(s"no BENCH/ directory in ${dir.getAbsoluteFile.getParent}")
+    dir
+  }
+  private lazy val recordPath: String = {
+    val recs = bench.list()
       .filter(n => n.matches("bench_r\\d+_record\\.json"))
       .sortBy(n => "\\d+".r.findFirstIn(n).get.toInt)
-    s"/root/repo/BENCH/${recs.last}"
+    if (recs.isEmpty) fail(s"no bench_r*_record.json in ${bench.getAbsolutePath}")
+    s"$bench/${recs.last}"
   }
-  private val rec = readFile(recordPath)
-  private val baseline = readFile("/root/repo/BENCH/BASELINE.md")
-  private val readme = readFile("/root/repo/README.md")
+  private lazy val rec = readFile(recordPath)
+  private lazy val baseline = readFile(s"$bench/BASELINE.md")
+  private lazy val readme = readFile("README.md")
 
   private def num(field: String): Double =
     ("\"" + field + "\":\\s*(-?[0-9.]+)").r.findFirstMatchIn(rec)

@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.Files
+import java.sql.Timestamp
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.fixtures.TranscriptGen
 import graft.streaming.StreamCuration
@@ -95,6 +97,34 @@ class StreamCurationSpec extends SparkSpec {
     // gate actually gates: some ingested doc failed lang/length in BOTH forms
     val all = chunks.map(_.count()).sum
     assert(fin.size < all)
+  }
+
+  test("an all-null-ts batch does not close a bucket early") {
+    // regression: doc 1 at 0 s sets its buckets' deadline to 300 s; copy 2
+    // arrives with null ts at watermark -60 s; unrelated docs at 310 s and
+    // 311 s move the watermark to 251 s (past watermark + gap, not 300 s).
+    // The buckets must still hold doc 1 when copy 3 arrives, so 3 is dropped
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[(Long, String, Timestamp)]
+    val q = StreamCuration.verdicts(spark, mem.toDS().toDF("doc_id", "text", "ts"),
+        StreamCuration.Config(inputDir = "", outDir = "", checkpointDir = "",
+          watermark = "1 minute", gap = "5 minutes"))
+      .writeStream.format("memory").queryName("sc_null_ts")
+      .outputMode("append").start()
+    def ts(sec: Long) = new Timestamp((TranscriptGen.BaseEpoch + sec) * 1000L)
+    val text = "alpha beta gamma delta epsilon zeta eta theta"
+    try {
+      Seq((1L, text, ts(0)), (2L, text, null),
+          (10L, "completely different words entirely here now", ts(310)),
+          (11L, "another unrelated document body of text", ts(311)),
+          (3L, text, null))
+        .foreach { row => mem.addData(row); q.processAllAvailable() }
+      val dropped = spark.table("sc_null_ts").groupBy("doc_id")
+        .agg(max(col("dropped").cast("int")).as("d"))
+        .as[(Long, Int)].collect().toMap
+      assert(dropped == Map(1L -> 0, 2L -> 1, 10L -> 0, 11L -> 0, 3L -> 1), dropped)
+    } finally q.stop()
   }
 
   test("plan: exactly ONE stateful operator; the state exchange is the only shuffle") {

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import org.apache.spark.sql.{DataFrame, Encoder}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.fixtures.TranscriptGen
 import graft.streaming.StreamDedup
@@ -118,6 +120,57 @@ class StreamDedupSpec extends SparkSpec {
       assert(removed >= rowsBefore,
         s"null-ts state not released: $rowsBefore groups, only $removed removed")
     } finally q.stop()
+  }
+
+  /** Feeds `rows` through `op` one micro-batch per row; returns the
+    * (a, b) pairs emitted.
+    */
+  private def pairsOf[T: Encoder](name: String, rows: Seq[T])(
+      op: DataFrame => DataFrame): Set[(Long, Long)] = {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[T]
+    val q = op(mem.toDF()).writeStream.format("memory").queryName(name)
+      .outputMode("append").start()
+    try {
+      rows.foreach { row => mem.addData(row); q.processAllAvailable() }
+      spark.table(name).toDF("a", "b", "score", "ts").select("a", "b")
+        .as[(Long, Long)].collect().toSet
+    } finally q.stop()
+  }
+
+  // regression for both tests below: doc 1 at 0 s sets its buckets'
+  // deadline to 300 s; copy 2 arrives with null ts at watermark -60 s;
+  // unrelated rows at 310 s and 311 s move the watermark to 251 s (past
+  // watermark + gap, not 300 s). The buckets must still hold docs 1 and 2
+  // when copy 3 arrives
+
+  test("text: an all-null-ts batch does not close a bucket early") {
+    import spark.implicits._
+    val text = "alpha beta gamma delta epsilon zeta eta theta"
+    val pairs = pairsOf("sd_null_early", Seq(
+        (1L, text, ts(0)), (2L, text, null),
+        (10L, "completely different words entirely here now", ts(310)),
+        (11L, "another unrelated document body of text", ts(311)),
+        (3L, text, null))) { in =>
+      StreamDedup.nearDupPairs(spark, in.toDF("doc_id", "text", "ts"),
+        watermark = "1 minute", gap = "5 minutes").toDF()
+    }
+    assert(pairs == Set((1L, 2L), (1L, 3L), (2L, 3L)), pairs)
+  }
+
+  test("vector: an all-null-ts batch does not close a bucket early") {
+    import spark.implicits._
+    val v = Seq(1.0, 0.5, 0.25, 0.0)
+    val pairs = pairsOf("sd_vec_null_early", Seq(
+        (1L, v, ts(0)), (2L, v, null),
+        (10L, Seq(0.0, 1.0, 0.0, 0.0), ts(310)),
+        (11L, Seq(0.0, 0.0, 1.0, 0.0), ts(311)),
+        (3L, v, null))) { in =>
+      StreamDedup.nearDupVectorPairs(spark, in.toDF("vec_id", "embedding", "ts"),
+        watermark = "1 minute", gap = "5 minutes").toDF()
+    }
+    assert(pairs == Set((1L, 2L), (1L, 3L), (2L, 3L)), pairs)
   }
 
   test("a saturated bucket stops emitting and frees its members") {

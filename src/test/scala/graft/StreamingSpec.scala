@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
 import graft.fixtures.TranscriptGen
 import graft.model.Turn
 import graft.sink.ExactlyOnceSink
-import graft.streaming.{DedupState, Sessionize, StreamValidate, TurnJoin}
+import graft.streaming.{DedupState, Sessionize, StreamCep, StreamCuration, StreamDedup,
+  StreamValidate, TurnJoin}
 import graft.validate.ValidationPipeline
 
 /** Streaming-layer goldens: batch/stream parity, checkpoint resume,
@@ -124,38 +125,35 @@ class StreamingSpec extends SparkSpec {
     assert(got.toSet == want, "lost or extra rows after restart")
   }
 
-  test("per-batch catalog refresh: entity added mid-stream is honored by the next micro-batch (fused + relational)") {
+  test("per-batch catalog refresh: entity added mid-stream is honored by the next micro-batch") {
     import spark.implicits._
-    for (relational <- Seq(false, true)) {
-      val tag = if (relational) "rel" else "fused"
-      val in = tmp(s"in_cr_$tag"); val out = tmp(s"out_cr_$tag")
-      val ck = tmp(s"ck_cr_$tag"); val cat = tmp(s"cat_cr_$tag")
-      // stale catalog: the scenario's target entity (PER_TARGET0 for
-      // u=1, h=42) does not exist yet → TARGET_MISSING rejection
-      graft.model.CatalogIO.write(spark, cat,
-        TranscriptGen.entities.filterNot(_.code == "PER_TARGET0"),
-        TranscriptGen.defAllowed, TranscriptGen.attributeDefs)
-      def turn(i: Int) = Turn("CREF", i, "user",
-        TranscriptGen.userText("valid_email", 1, 42L), null, ts(i))
-      Seq(turn(0)).toDS().coalesce(1).write.mode("append").parquet(in)
-      val cfg = StreamValidate.Config(in, out, ck, withDedup = false,
-        maxFilesPerTrigger = 10, catalogDir = Some(cat), relational = relational)
-      val q = StreamValidate.start(spark, cfg, TranscriptGen.catalog)
-      q.processAllAvailable()
-      // catalog update lands mid-stream; the NEXT micro-batch must see it
-      graft.model.CatalogIO.write(spark, cat, TranscriptGen.entities,
-        TranscriptGen.defAllowed, TranscriptGen.attributeDefs)
-      Seq(turn(1)).toDS().coalesce(1).write.mode("append").parquet(in)
-      q.processAllAvailable(); q.stop()
-      val sink = new ExactlyOnceSink(out)
-      val rejected = sink.read(spark, "rejected").select("turn_idx", "reason")
-        .as[(Int, String)].collect().toMap
-      val valid = sink.read(spark, "valid").select("turn_idx").as[Int].collect().toSet
-      assert(rejected.get(0).contains("TARGET_MISSING"),
-        s"[$tag] pre-update turn should reject TARGET_MISSING, got $rejected")
-      assert(valid == Set(1),
-        s"[$tag] post-update turn should be valid, got valid=$valid rejected=$rejected")
-    }
+    val in = tmp("in_cr"); val out = tmp("out_cr")
+    val ck = tmp("ck_cr"); val cat = tmp("cat_cr")
+    // stale catalog: the scenario's target entity (PER_TARGET0 for
+    // u=1, h=42) does not exist yet → TARGET_MISSING rejection
+    graft.model.CatalogIO.write(spark, cat,
+      TranscriptGen.entities.filterNot(_.code == "PER_TARGET0"),
+      TranscriptGen.defAllowed, TranscriptGen.attributeDefs)
+    def turn(i: Int) = Turn("CREF", i, "user",
+      TranscriptGen.userText("valid_email", 1, 42L), null, ts(i))
+    Seq(turn(0)).toDS().coalesce(1).write.mode("append").parquet(in)
+    val cfg = StreamValidate.Config(in, out, ck, withDedup = false,
+      maxFilesPerTrigger = 10, catalogDir = Some(cat))
+    val q = StreamValidate.start(spark, cfg, TranscriptGen.catalog)
+    q.processAllAvailable()
+    // catalog update lands mid-stream; the NEXT micro-batch must see it
+    graft.model.CatalogIO.write(spark, cat, TranscriptGen.entities,
+      TranscriptGen.defAllowed, TranscriptGen.attributeDefs)
+    Seq(turn(1)).toDS().coalesce(1).write.mode("append").parquet(in)
+    q.processAllAvailable(); q.stop()
+    val sink = new ExactlyOnceSink(out)
+    val rejected = sink.read(spark, "rejected").select("turn_idx", "reason")
+      .as[(Int, String)].collect().toMap
+    val valid = sink.read(spark, "valid").select("turn_idx").as[Int].collect().toSet
+    assert(rejected.get(0).contains("TARGET_MISSING"),
+      s"pre-update turn should reject TARGET_MISSING, got $rejected")
+    assert(valid == Set(1),
+      s"post-update turn should be valid, got valid=$valid rejected=$rejected")
   }
 
   // ------------------------------------------------------- exactly-once sink
@@ -321,6 +319,30 @@ class StreamingSpec extends SparkSpec {
     val rows = spark.table("dedup_null_ts").select("conv_id", "turn_idx")
       .as[(String, Int)].collect().toSeq.sorted
     assert(rows == Seq(("N1", 0), ("N1", 1), ("OTHER", 0), ("OTHER", 1)), rows)
+  }
+
+  test("every keyed-state operator rejects a month-bearing gap") {
+    // a month has no fixed length in ms; all five entry points share one
+    // gap parser, so each must refuse it when the plan is built
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val turns = MemoryStream[Turn].toDS()
+    val docs = MemoryStream[(Long, String, Timestamp)].toDS().toDF("doc_id", "text", "ts")
+    val vecs = MemoryStream[(Long, Seq[Double], Timestamp)].toDS()
+      .toDF("vec_id", "embedding", "ts")
+    val gap = "1 month"
+    val entryPoints: Seq[(String, () => Any)] = Seq(
+      "DedupState.dedup" -> (() => DedupState.dedup(spark, turns, gap = gap)),
+      "StreamCep.searchRuns" -> (() => StreamCep.searchRuns(turns.toDF(), gap = gap)),
+      "StreamCuration.verdicts" -> (() => StreamCuration.verdicts(spark, docs,
+        StreamCuration.Config(inputDir = "", outDir = "", checkpointDir = "", gap = gap))),
+      "StreamDedup.nearDupPairs" -> (() => StreamDedup.nearDupPairs(spark, docs, gap = gap)),
+      "StreamDedup.nearDupVectorPairs" ->
+        (() => StreamDedup.nearDupVectorPairs(spark, vecs, gap = gap)))
+    entryPoints.foreach { case (name, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("month-bearing"), s"$name: ${e.getMessage}")
+    }
   }
 
   test("stateful dedup survives a batch spanning far more event time than the gap") {
