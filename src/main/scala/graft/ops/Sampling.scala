@@ -119,12 +119,14 @@ object Sampling {
       frac: Double = 0.2, idCol: String = "doc_id"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val key = md5(col(idCol).cast("string"))
+    // `_sk` is the stratum as a string for the driver-side bookkeeping
+    // (any strata type); the output keeps the column's own type
     val bucketed = docs.select(col(idCol), col(strataCol),
-      substring(key, 1, 2).as("_bk"))
+      col(strataCol).cast("string").as("_sk"), substring(key, 1, 2).as("_bk"))
     // strata x 256 rows: bounded driver materialization (like the IVF
     // centroid collect); at any corpus size this is the histogram of a
     // 1-byte prefix per stratum
-    val hist = bucketed.groupBy(strataCol, "_bk").agg(count(lit(1)).as("bn"))
+    val hist = bucketed.groupBy("_sk", "_bk").agg(count(lit(1)).as("bn"))
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     val nStratum: Map[String, Long] =
@@ -144,14 +146,14 @@ object Sampling {
     }
     val spark = docs.sparkSession
     import spark.implicits._
-    val offDf = broadcast(offsets.toDF(strataCol, "_bk", "_off"))
-    val cntDf = broadcast(nStratum.toSeq.toDF(strataCol, "n_stratum"))
-    val w = Window.partitionBy(col(strataCol), col("_bk"))
+    val offDf = broadcast(offsets.toDF("_sk", "_bk", "_off"))
+    val cntDf = broadcast(nStratum.toSeq.toDF("_sk", "n_stratum"))
+    val w = Window.partitionBy(col("_sk"), col("_bk"))
       .orderBy(key, col(idCol))
     bucketed
-      .join(offDf, Seq(strataCol, "_bk")) // drops non-candidate buckets
+      .join(offDf, Seq("_sk", "_bk")) // drops non-candidate buckets
       .withColumn("rk", row_number().over(w).cast("long") + col("_off"))
-      .join(cntDf, Seq(strataCol))
+      .join(cntDf, Seq("_sk"))
       .withColumn("n_take", ceil(col("n_stratum") * lit(frac)))
       .filter(col("rk") <= col("n_take"))
       .select(col(idCol), col(strataCol), col("rk"), col("n_take"))

@@ -21,6 +21,8 @@ import org.apache.spark.sql.functions.col
   * Used as is by the curation, quality and ANN streams; [[ExactlyOnceSink]]
   * adds the validation routes on top. At cluster scale the marker dir
   * lives on the same object store as the table; one tiny file per batch.
+  * Those streams' `start`s call [[graft.io.LocalFs.use]], so the parquet
+  * write's files, `.crc`s and directories do not fork a `chmod` each.
   */
 final class ManifestSink(outDir: String) extends Serializable {
 

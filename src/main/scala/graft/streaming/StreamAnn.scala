@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.io.LocalFs
 import graft.sink.ManifestSink
 
 /** ONLINE similarity serving: a stream of query vectors answered from the
@@ -36,6 +37,7 @@ object StreamAnn {
       availableNow: Boolean = false)
 
   def start(spark: SparkSession, cfg: Config): StreamingQuery = {
+    LocalFs.use(spark)
     val sink = new ManifestSink(cfg.outDir)
     spark.readStream
       .schema("q_id long, embedding array<double>, ts timestamp")

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.io.LocalFs
 import graft.sink.ManifestSink
 
 /** One lane row per (doc, lane): lane -1 = exact-digest, 0..bands-1 =
@@ -170,6 +171,7 @@ object StreamCuration {
     * suppresses replays.
     */
   def start(spark: SparkSession, cfg: Config): StreamingQuery = {
+    LocalFs.use(spark)
     val sink = new ManifestSink(cfg.outDir)
     val docs = spark.readStream
       .schema("doc_id long, text string, ts timestamp")

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.io.LocalFs
 import graft.ops.{GopherRules, LangModel, QualityModel}
 import graft.sink.ManifestSink
 
@@ -79,6 +80,7 @@ object StreamQuality {
       availableNow: Boolean = false)
 
   def start(spark: SparkSession, cfg: Config): StreamingQuery = {
+    LocalFs.use(spark)
     val sink = new ManifestSink(cfg.outDir)
     spark.readStream
       .schema("doc_id long, text string, lang string, source string, n_chars long")

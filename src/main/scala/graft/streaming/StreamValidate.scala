@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
+import graft.io.LocalFs
 import graft.model.Catalog
 import graft.sink.ExactlyOnceSink
 import graft.validate.ValidationPipeline
@@ -17,7 +18,10 @@ import graft.validate.ValidationPipeline
   * the Iceberg streaming source — no Iceberg jars offline, SURVEY.md §7.6;
   * swapping `format("parquet")` for `format("iceberg")` is the only
   * production delta). Checkpointed: stop/restart resumes from offsets and
-  * the sink manifest suppresses the replayed batch.
+  * the sink manifest suppresses the replayed batch. [[start]] routes the
+  * session's `file:` I/O through [[graft.io.LocalFs]]: Hadoop's local
+  * filesystem would otherwise start a `chmod` or `readlink` process for
+  * most checkpoint, state-store and sink files, hundreds per micro-batch.
   *
   * Partitioning note (north rule): the stateless validation stages are
   * NARROW — no shuffle at all. The only exchange is the one Spark inserts
@@ -72,6 +76,7 @@ object StreamValidate {
     * catalog; ignored when `cfg.catalogDir` enables per-batch refresh.
     */
   def start(spark: SparkSession, cfg: Config, cat: Catalog): StreamingQuery = {
+    LocalFs.use(spark)
     val sink = new ExactlyOnceSink(cfg.outDir)
     val (frame, validateBatch): (DataFrame, (DataFrame, Long) => Unit) =
       cfg.catalogDir match {

@@ -140,6 +140,20 @@ class QualityOpsSpec extends SparkSpec {
       s"window partition keys missing the md5 bucket: $winSpecs")
   }
 
+  test("stratified sample: int strata keep their type and exact per-stratum counts") {
+    val docs = spark.range(2000).select(col("id").as("doc_id"),
+      (col("id") % 7 === 0).cast("int").as("tier"))
+    val out = Sampling.stratifiedSample(docs, "tier", 0.1)
+    assert(out.schema("tier").dataType === org.apache.spark.sql.types.IntegerType)
+    val got = out.groupBy("tier").count().as[(Int, Long)].collect().toMap
+    assert(got === Map(0 -> math.ceil(1714 * 0.1).toLong, 1 -> math.ceil(286 * 0.1).toLong))
+    // same rows and ranks as the string-strata form of the same corpus
+    val asString = Sampling.stratifiedSample(
+      docs.withColumn("tier", col("tier").cast("string")), "tier", 0.1)
+    assert(out.withColumn("tier", col("tier").cast("string")).orderBy("doc_id").collect().toSeq ===
+      asString.orderBy("doc_id").collect().toSeq)
+  }
+
   // ----------------------------------------------------------------- sqTopK
 
   test("sq top-k: int8 quantization keeps high recall vs exact brute force") {

@@ -394,6 +394,41 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("checkpoint, RocksDB state and sink I/O start no processes (JFR jdk.ProcessStart)") {
+    import scala.jdk.CollectionConverters._
+    val in = tmp("in_fork"); val out = tmp("out_fork"); val ck = tmp("ck_fork")
+    TranscriptGen.turnsDs(spark, 40, 10, 20).repartition(2).write.mode("append").parquet(in)
+    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    val dump = Paths.get(tmp("jfr"), "drain.jfr")
+    try {
+      rec.start()
+      // a process the recording must see, so "none seen" is not vacuous
+      new ProcessBuilder("true", "graft-jfr-control").start().waitFor()
+      val q = StreamValidate.start(spark, StreamValidate.Config(in, out, ck,
+        withDedup = true, maxFilesPerTrigger = 1, availableNow = true), TranscriptGen.catalog)
+      q.awaitTermination(); q.stop()
+      rec.stop()
+      rec.dump(dump)
+    } finally {
+      rec.close()
+      prev match {
+        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
+        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      }
+    }
+    assert(new ExactlyOnceSink(out).committedBatches().size >= 2, "expected 2 micro-batches")
+    val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
+      .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command"))
+    assert(commands.exists(_.contains("graft-jfr-control")), commands.mkString("\n"))
+    val dirs = Seq(ck, out).flatMap(d => Seq(d, new java.io.File(d).getCanonicalPath))
+    val forked = commands.filter(c => dirs.exists(c.contains))
+    assert(forked.isEmpty, s"${forked.size} process starts, e.g.\n${forked.take(5).mkString("\n")}")
+  }
+
   test("sink metrics table: per-partition lineage rows committed with the batch") {
     import spark.implicits._
     val out = tmp("out_m")
