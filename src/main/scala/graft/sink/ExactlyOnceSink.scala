@@ -47,15 +47,14 @@ final class ExactlyOnceSink(outDir: String) extends Serializable {
     *    (batch, partition) — per-partition lineage (north rule).
     */
   def read(spark: SparkSession, kind: String): DataFrame = {
-    val dec = table.read(spark)
-    if (dec.columns.isEmpty) return dec // nothing committed yet
-    lazy val (valid, rejected, webdata) = ValidationPipeline.routes(dec, "batch_id")
-    kind match {
-      case "decisions" => dec
-      case "valid" => valid
-      case "rejected" => rejected
-      case "webdata" => webdata
-      case "metrics" => dec.groupBy("batch_id", "partition_id")
+    // the kind is checked before the table is read, so an unknown one
+    // throws even while nothing is committed
+    val view: DataFrame => DataFrame = kind match {
+      case "decisions" => identity
+      case "valid" => ValidationPipeline.routes(_, "batch_id")._1
+      case "rejected" => ValidationPipeline.routes(_, "batch_id")._2
+      case "webdata" => ValidationPipeline.routes(_, "batch_id")._3
+      case "metrics" => _.groupBy("batch_id", "partition_id")
         .agg(
           sum(when(col("decision") === "valid", 1L).otherwise(0L)).as("rows_validated"),
           sum(when(col("decision") === "rejected", 1L).otherwise(0L)).as("rows_rejected"),
@@ -64,5 +63,7 @@ final class ExactlyOnceSink(outDir: String) extends Serializable {
           "batch_id")
       case other => throw new IllegalArgumentException(s"unknown sink output '$other'")
     }
+    val dec = table.read(spark)
+    if (dec.columns.isEmpty) dec else view(dec) // empty: nothing committed yet
   }
 }

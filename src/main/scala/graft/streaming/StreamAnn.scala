@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.io.LocalFs
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 import graft.sink.ManifestSink
 
 /** ONLINE similarity serving: a stream of query vectors answered from the
@@ -10,6 +10,9 @@ import graft.sink.ManifestSink
   * running continuously.
   *
   *   readStream(queries) → per-batch `ivfTopKIndexed` → exactly-once sink
+  *
+  * A [[FileStream]] query with no in-plan stage; results are committed to
+  * a [[ManifestSink]] at `outDir` (read them with its `read`).
   *
   * The index path is resolved through its `CURRENT` pointer ON EVERY
   * MICRO-BATCH (ivfTopKIndexed resolves at call time), so a retrain
@@ -37,26 +40,11 @@ object StreamAnn {
       availableNow: Boolean = false)
 
   def start(spark: SparkSession, cfg: Config): StreamingQuery = {
-    LocalFs.use(spark)
     val sink = new ManifestSink(cfg.outDir)
-    spark.readStream
-      .schema("q_id long, embedding array<double>, ts timestamp")
-      .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-      .parquet(cfg.inputDir)
-      .writeStream
-      .option("checkpointLocation", cfg.checkpointDir)
-      .outputMode("append")
-      .trigger(if (cfg.availableNow) Trigger.AvailableNow()
-        else Trigger.ProcessingTime("1 second"))
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        sink.writeBatch(
-          graft.ops.Similarity.ivfTopKIndexed(cfg.indexDir,
-            df.select("q_id", "embedding"), cfg.k, cfg.nprobe), id)
-      }
-      .start()
+    FileStream.start(spark, StructType.fromDDL("q_id long, embedding array<double>, ts timestamp"),
+      cfg.inputDir, cfg.maxFilesPerTrigger, cfg.checkpointDir, cfg.availableNow)(identity) {
+      (df, id) => sink.writeBatch(graft.ops.Similarity.ivfTopKIndexed(cfg.indexDir,
+        df.select("q_id", "embedding"), cfg.k, cfg.nprobe), id)
+    }
   }
-
-  /** Committed results across all batches. */
-  def readResults(spark: SparkSession, outDir: String): DataFrame =
-    new ManifestSink(outDir).read(spark)
 }

@@ -4,8 +4,8 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.io.LocalFs
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 import graft.sink.ManifestSink
 
 /** One lane row per (doc, lane): lane -1 = exact-digest, 0..bands-1 =
@@ -164,32 +164,16 @@ object StreamCuration {
         col("lang_pred") === lang && col("ws_tokens") >= minTokens)
       .select("doc_id", "lang_pred", "ws_tokens", "ts")
 
-  /** Start the full query: file-stream source (schema'd parquet dir, the
-    * offline stand-in for the production stream source) → [[verdicts]] →
-    * per-batch survivor collapse + gate → [[ManifestSink]] exactly-once.
-    * Checkpointed: stop/restart resumes offsets and the manifest
-    * suppresses replays.
+  /** Start the full [[FileStream]] query: [[verdicts]] in the stream plan
+    * → per-batch survivor collapse + gate → [[ManifestSink]] exactly-once
+    * at `cfg.outDir` (read the survivors with its `read`).
     */
   def start(spark: SparkSession, cfg: Config): StreamingQuery = {
-    LocalFs.use(spark)
     val sink = new ManifestSink(cfg.outDir)
-    val docs = spark.readStream
-      .schema("doc_id long, text string, ts timestamp")
-      .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-      .parquet(cfg.inputDir)
-    verdicts(spark, docs, cfg).toDF()
-      .writeStream
-      .option("checkpointLocation", cfg.checkpointDir)
-      .outputMode("append")
-      .trigger(if (cfg.availableNow) Trigger.AvailableNow()
-        else Trigger.ProcessingTime("1 second"))
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        sink.writeBatch(survivorsOfBatch(df, cfg.lang, cfg.minTokens), id)
-      }
-      .start()
+    FileStream.start(spark, StructType.fromDDL("doc_id long, text string, ts timestamp"),
+      cfg.inputDir, cfg.maxFilesPerTrigger, cfg.checkpointDir, cfg.availableNow)(
+      verdicts(spark, _, cfg).toDF()) {
+      (df, id) => sink.writeBatch(survivorsOfBatch(df, cfg.lang, cfg.minTokens), id)
+    }
   }
-
-  /** Committed survivors across all batches. */
-  def readSurvivors(spark: SparkSession, outDir: String): DataFrame =
-    new ManifestSink(outDir).read(spark)
 }

@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.io.LocalFs
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 import graft.ops.{GopherRules, LangModel, QualityModel}
 import graft.sink.ManifestSink
 
@@ -79,24 +79,16 @@ object StreamQuality {
       maxFilesPerTrigger: Int = 4,
       availableNow: Boolean = false)
 
+  /** Start the [[FileStream]] query: no in-plan stage; each micro-batch
+    * is gated by [[gates]] and committed to a [[ManifestSink]] at
+    * `cfg.outDir` (read the results with its `read`).
+    */
   def start(spark: SparkSession, cfg: Config): StreamingQuery = {
-    LocalFs.use(spark)
     val sink = new ManifestSink(cfg.outDir)
-    spark.readStream
-      .schema("doc_id long, text string, lang string, source string, n_chars long")
-      .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-      .parquet(cfg.inputDir)
-      .writeStream
-      .option("checkpointLocation", cfg.checkpointDir)
-      .outputMode("append")
-      .trigger(if (cfg.availableNow) Trigger.AvailableNow()
-        else Trigger.ProcessingTime("1 second"))
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        sink.writeBatch(gates(spark, df, cfg.model), id)
-      }
-      .start()
+    FileStream.start(spark,
+      StructType.fromDDL("doc_id long, text string, lang string, source string, n_chars long"),
+      cfg.inputDir, cfg.maxFilesPerTrigger, cfg.checkpointDir, cfg.availableNow)(identity) {
+      (df, id) => sink.writeBatch(gates(spark, df, cfg.model), id)
+    }
   }
-
-  def readResults(spark: SparkSession, outDir: String): DataFrame =
-    new ManifestSink(outDir).read(spark)
 }

@@ -3,8 +3,7 @@ package graft.streaming
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
-import graft.io.LocalFs
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 import graft.model.Catalog
 import graft.sink.ExactlyOnceSink
 import graft.validate.ValidationPipeline
@@ -14,14 +13,10 @@ import graft.validate.ValidationPipeline
   * foreachBatch exactly-once sink` (SURVEY.md §3.1 Spark equivalent): one
   * decisions write per micro-batch, read back as the three routes.
   *
-  * Source is a schema'd parquet-dir file stream (the local stand-in for
-  * the Iceberg streaming source — no Iceberg jars offline, SURVEY.md §7.6;
-  * swapping `format("parquet")` for `format("iceberg")` is the only
-  * production delta). Checkpointed: stop/restart resumes from offsets and
-  * the sink manifest suppresses the replayed batch. [[start]] routes the
-  * session's `file:` I/O through [[graft.io.LocalFs]]: Hadoop's local
-  * filesystem would otherwise start a `chmod` or `readlink` process for
-  * most checkpoint, state-store and sink files, hundreds per micro-batch.
+  * The source, checkpoint, trigger and `file:` I/O setup are
+  * [[FileStream]]'s, shared with the other streams; this object supplies
+  * the transcript schema, the in-plan dedup (+ validation) stage and the
+  * [[ExactlyOnceSink]] write.
   *
   * Partitioning note (north rule): the stateless validation stages are
   * NARROW — no shuffle at all. The only exchange is the one Spark inserts
@@ -51,56 +46,35 @@ object StreamValidate {
       availableNow: Boolean = false,
       catalogDir: Option[String] = None)
 
-  /** Source + optional conv_id-keyed dedup state — the streaming stages
-    * that must live in the stream plan (state, watermark). Validation is
-    * appended either here (static catalog) or per-batch (refresh mode).
-    */
-  private def turnsStream(spark: SparkSession, cfg: Config): DataFrame = {
-    import spark.implicits._
-    val raw = spark.readStream
-      .schema(graft.model.Schemas.transcript)
-      .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-      .parquet(cfg.inputDir)
-    if (!cfg.withDedup) raw
-    else DedupState.dedup(spark, raw.as[graft.model.Turn], cfg.watermark)
-      .drop("out_of_order").toDF()
-  }
-
-  def decisions(spark: SparkSession, cfg: Config, cat: Catalog): DataFrame =
-    // decideFast: one-pass parse+evaluate (agreement-tested with decide);
-    // lineage counters surface through its graft_out observed metrics
-    ValidationPipeline.decideFast(spark, turnsStream(spark, cfg), cat,
-      cfg.enableBlacklist).toDF()
-
   /** Start the query; returns the running handle. `cat` is the static
     * catalog; ignored when `cfg.catalogDir` enables per-batch refresh.
+    * The stream plan carries the source and the optional conv_id-keyed
+    * dedup state (state and watermark must live there); validation is
+    * appended to it (static catalog) or run per batch (refresh mode).
     */
   def start(spark: SparkSession, cfg: Config, cat: Catalog): StreamingQuery = {
-    LocalFs.use(spark)
+    import spark.implicits._
     val sink = new ExactlyOnceSink(cfg.outDir)
-    val (frame, validateBatch): (DataFrame, (DataFrame, Long) => Unit) =
-      cfg.catalogDir match {
-        case None =>
-          (decisions(spark, cfg, cat),
-            (df: DataFrame, id: Long) => sink.writeBatch(df, id))
-        case Some(dir) =>
-          // Refresh mode: the stream plan carries only source+state; the
-          // catalog is re-read and re-broadcast per micro-batch, so a dim
-          // row added mid-stream is honored by the NEXT batch (tested).
-          (turnsStream(spark, cfg), (df: DataFrame, id: Long) =>
-            sink.writeBatch(ValidationPipeline.decideFast(spark, df,
-              graft.model.CatalogIO.load(spark, dir), cfg.enableBlacklist).toDF(), id))
-      }
-    frame.writeStream
-      .option("checkpointLocation", cfg.checkpointDir)
-      .outputMode("append")
-      // AvailableNow = drain the backlog at max rate then stop (the honest
-      // trigger for throughput benchmarking and for batch-catchup restarts);
-      // ProcessingTime for the steady-state tailing mode.
-      .trigger(if (cfg.availableNow) Trigger.AvailableNow()
-        else Trigger.ProcessingTime("1 second"))
-      .foreachBatch(validateBatch)
-      .start()
+    def dedup(raw: DataFrame): DataFrame =
+      if (!cfg.withDedup) raw
+      else DedupState.dedup(spark, raw.as[graft.model.Turn], cfg.watermark)
+        .drop("out_of_order").toDF()
+    // decideFast: one-pass parse+evaluate (agreement-tested with decide);
+    // lineage counters surface through its graft_out observed metrics
+    def decide(df: DataFrame, c: Catalog): DataFrame =
+      ValidationPipeline.decideFast(spark, df, c, cfg.enableBlacklist).toDF()
+    val run = FileStream.start(spark, graft.model.Schemas.transcript, cfg.inputDir,
+      cfg.maxFilesPerTrigger, cfg.checkpointDir, cfg.availableNow) _
+    cfg.catalogDir match {
+      case None => run(raw => decide(dedup(raw), cat))(sink.writeBatch)
+      case Some(dir) =>
+        // Refresh mode: the catalog is re-read and re-broadcast per
+        // micro-batch, so a dim row added mid-stream is honored by the
+        // NEXT batch (tested).
+        run(dedup) { (df, id) =>
+          sink.writeBatch(decide(df, graft.model.CatalogIO.load(spark, dir)), id)
+        }
+    }
   }
 
   /** Listener appending one JSON line per finished batch with the state-op

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
+import graft.sink.ManifestSink
 import graft.streaming.StreamAnn
 
 /** Streaming ANN serving from the persisted IVF index: per-batch results
@@ -33,7 +34,7 @@ class StreamAnnSpec extends SparkSpec {
     Similarity.buildIvfIndex(emb.unionByName(twins), s"$idx/versions/v1", nlist = 8)
 
     def results(): Map[(Long, Int), Long] =
-      StreamAnn.readResults(spark, out)
+      new ManifestSink(out).read(spark)
         .select("q_id", "rank", "vec_id").as[(Long, Int, Long)]
         .collect().map { case (q, r, v) => (q, r) -> v }.toMap
 

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.fixtures.TranscriptGen
+import graft.sink.ManifestSink
 import graft.streaming.StreamCuration
 
 /** Streaming curation composition: ingest → online exact+near dedup →
@@ -57,7 +58,7 @@ class StreamCurationSpec extends SparkSpec {
     q1.awaitTermination(); q1.stop()
 
     def survivors(): Set[Long] =
-      StreamCuration.readSurvivors(spark, out)
+      new ManifestSink(out).read(spark)
         .select("doc_id").as[Long].collect().toSet
     def batchSurvivors(corpus: org.apache.spark.sql.DataFrame): Set[Long] =
       graft.ops.Curation.curateMinhash(corpus.drop("ts"),

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import graft.sink.ManifestSink
 import graft.streaming.StreamQuality
 
 /** Online quality gating with frozen batch-fitted artifacts: stream
@@ -39,7 +40,7 @@ class StreamQualitySpec extends SparkSpec {
     val q2 = StreamQuality.start(spark, cfg)
     q2.awaitTermination(); q2.stop()
 
-    val got = rows(StreamQuality.readResults(spark, out))
+    val got = rows(new ManifestSink(out).read(spark))
     val want = rows(StreamQuality.gates(spark, docs, m))
     assert(got == want)
     assert(got.size == docs.count())

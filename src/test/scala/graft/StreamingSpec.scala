@@ -8,11 +8,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.fixtures.TranscriptGen
 import graft.model.Turn
-import graft.sink.ExactlyOnceSink
-import graft.streaming.{DedupState, Sessionize, StreamCep, StreamCuration, StreamDedup,
-  StreamValidate, TurnJoin}
+import graft.ops.Similarity
+import graft.sink.{ExactlyOnceSink, ManifestSink}
+import graft.streaming.{DedupState, Sessionize, StreamAnn, StreamCep, StreamCuration,
+  StreamDedup, StreamQuality, StreamValidate, TurnJoin}
 import graft.validate.ValidationPipeline
 
 /** Streaming-layer goldens: batch/stream parity, checkpoint resume,
@@ -396,8 +398,37 @@ class StreamingSpec extends SparkSpec {
 
   test("checkpoint, RocksDB state and sink I/O start no processes (JFR jdk.ProcessStart)") {
     import scala.jdk.CollectionConverters._
-    val in = tmp("in_fork"); val out = tmp("out_fork"); val ck = tmp("ck_fork")
-    TranscriptGen.turnsDs(spark, 40, 10, 20).repartition(2).write.mode("append").parquet(in)
+    import spark.implicits._
+    // one tiny input per stream `start`: (name, out, ck, min batches, start)
+    def dirs(tag: String) = (tmp(s"in_fork_$tag"), tmp(s"out_fork_$tag"), tmp(s"ck_fork_$tag"))
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .filter($"doc_id" < 60)
+    val t0 = lit(Timestamp.valueOf("2024-01-01 00:00:00"))
+    val streams: Seq[(String, String, String, Int, () => StreamingQuery)] = Seq(
+      { val (in, out, ck) = dirs("validate")
+        TranscriptGen.turnsDs(spark, 40, 10, 20).repartition(2).write.mode("append").parquet(in)
+        ("StreamValidate", out, ck, 2, () => StreamValidate.start(spark, StreamValidate.Config(
+          in, out, ck, withDedup = true, maxFilesPerTrigger = 1, availableNow = true),
+          TranscriptGen.catalog)) },
+      { val (in, out, ck) = dirs("quality")
+        val m = StreamQuality.fit(spark, docs,
+          stopwords = graft.ops.TextMetrics.stopwords.toMap.apply("en"))
+        docs.coalesce(1).write.mode("append").parquet(in)
+        ("StreamQuality", out, ck, 1, () => StreamQuality.start(spark,
+          StreamQuality.Config(in, out, ck, m, availableNow = true))) },
+      { val (in, out, ck) = dirs("ann")
+        val idx = tmp("idx_fork")
+        val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+          .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
+        Similarity.buildIvfIndex(emb, idx, nlist = 4)
+        emb.filter($"vec_id" % 50 === 0).select($"vec_id".as("q_id"), $"embedding", t0.as("ts"))
+          .coalesce(1).write.mode("append").parquet(in)
+        ("StreamAnn", out, ck, 1, () => StreamAnn.start(spark,
+          StreamAnn.Config(idx, in, out, ck, k = 3, availableNow = true))) },
+      { val (in, out, ck) = dirs("curation")
+        docs.select($"doc_id", $"text", t0.as("ts")).coalesce(1).write.mode("append").parquet(in)
+        ("StreamCuration", out, ck, 1, () => StreamCuration.start(spark,
+          StreamCuration.Config(in, out, ck, availableNow = true))) })
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -408,9 +439,14 @@ class StreamingSpec extends SparkSpec {
       rec.start()
       // a process the recording must see, so "none seen" is not vacuous
       new ProcessBuilder("true", "graft-jfr-control").start().waitFor()
-      val q = StreamValidate.start(spark, StreamValidate.Config(in, out, ck,
-        withDedup = true, maxFilesPerTrigger = 1, availableNow = true), TranscriptGen.catalog)
-      q.awaitTermination(); q.stop()
+      streams.foreach { case (_, _, _, _, start) =>
+        // the keys LocalFs.use sets: an earlier stream's registration on
+        // this shared session must not stand in for a missing one
+        Seq("fs.file.impl", "fs.file.impl.disable.cache", "fs.AbstractFileSystem.file.impl")
+          .foreach(spark.conf.unset)
+        val q = start()
+        q.awaitTermination(); q.stop()
+      }
       rec.stop()
       rec.dump(dump)
     } finally {
@@ -420,13 +456,23 @@ class StreamingSpec extends SparkSpec {
         case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     }
-    assert(new ExactlyOnceSink(out).committedBatches().size >= 2, "expected 2 micro-batches")
     val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
       .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command"))
     assert(commands.exists(_.contains("graft-jfr-control")), commands.mkString("\n"))
-    val dirs = Seq(ck, out).flatMap(d => Seq(d, new java.io.File(d).getCanonicalPath))
-    val forked = commands.filter(c => dirs.exists(c.contains))
-    assert(forked.isEmpty, s"${forked.size} process starts, e.g.\n${forked.take(5).mkString("\n")}")
+    streams.foreach { case (name, out, ck, batches, _) =>
+      assert(new ManifestSink(out).committedBatches().size >= batches,
+        s"$name: expected $batches micro-batches")
+      val dirs = Seq(ck, out).flatMap(d => Seq(d, new java.io.File(d).getCanonicalPath))
+      val forked = commands.filter(c => dirs.exists(c.contains))
+      assert(forked.isEmpty,
+        s"$name: ${forked.size} process starts, e.g.\n${forked.take(5).mkString("\n")}")
+    }
+  }
+
+  test("sink read rejects an unknown output kind before any batch commits") {
+    val sink = new ExactlyOnceSink(tmp("out_kind"))
+    assert(sink.committedBatches().isEmpty)
+    intercept[IllegalArgumentException](sink.read(spark, "bogus"))
   }
 
   test("sink metrics table: per-partition lineage rows committed with the batch") {
