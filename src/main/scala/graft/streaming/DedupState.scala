@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.nio.ByteBuffer
 import java.sql.Timestamp
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.model.Turn
@@ -14,8 +15,54 @@ final case class DedupedTurn(
     ts: Timestamp,
     out_of_order: Boolean) // arrived with a lower turn_idx than already seen
 
-/** Per-conversation state kept while the conversation is open. */
-final case class ConvState(seen: Set[Int], maxTurn: Int, dups: Long)
+/** Per-conversation state kept while the conversation is open. `seen`
+  * holds the turn indices already emitted as [[SeenTurns]] bytes: Spark
+  * decodes a binary field as it is, while a `Set[Int]` (and, in Spark 4.1,
+  * an `Array[Int]` too) decodes through a `MapObjects` loop whose lambda
+  * variable is numbered anew in every plan, so each micro-batch compiled
+  * one more state decoder while the batch's other tasks waited for it.
+  */
+final case class ConvState(seen: Array[Byte], maxTurn: Int, dups: Long)
+
+/** The seen-turn set of a [[ConvState]]: distinct turn indices in
+  * ascending order, 4 big-endian bytes each. A lookup is a binary
+  * search; an insert copies the array once.
+  */
+private[graft] object SeenTurns {
+
+  val empty: Array[Byte] = Array.emptyByteArray
+
+  /** Position of `turn`, or -(insertion point) - 1. */
+  private def search(seen: Array[Byte], turn: Int): Int = {
+    val buf = ByteBuffer.wrap(seen)
+    var lo = 0
+    var hi = seen.length / 4 - 1
+    while (lo <= hi) {
+      val mid = (lo + hi) >>> 1
+      val v = buf.getInt(mid * 4)
+      if (v < turn) lo = mid + 1
+      else if (v > turn) hi = mid - 1
+      else return mid
+    }
+    -(lo + 1)
+  }
+
+  def contains(seen: Array[Byte], turn: Int): Boolean = search(seen, turn) >= 0
+
+  /** `seen` with `turn` added; `seen` itself when it already holds it. */
+  def insert(seen: Array[Byte], turn: Int): Array[Byte] = {
+    val at = search(seen, turn)
+    if (at >= 0) seen
+    else {
+      val off = (-at - 1) * 4
+      val next = new Array[Byte](seen.length + 4)
+      System.arraycopy(seen, 0, next, 0, off)
+      ByteBuffer.wrap(next).putInt(off, turn)
+      System.arraycopy(seen, off, next, off + 4, seen.length - off)
+      next
+    }
+  }
+}
 
 /** conv_id-keyed stateful dedup + ordering (north rule: "per-conversation
   * answer-dedup and ordering state" via [[EventTimeState]]).
@@ -41,14 +88,15 @@ object DedupState {
     EventTimeState.closing(
         turns.withWatermark("ts", watermark).groupByKey(_.conv_id), gap,
         (t: Turn) => t.ts) { (_, rows, prev: Option[ConvState]) =>
-      var s = prev.getOrElse(ConvState(Set.empty, -1, 0L))
+      var s = prev.getOrElse(ConvState(SeenTurns.empty, -1, 0L))
       val out = rows.flatMap { t =>
-        if (s.seen.contains(t.turn_idx)) {
+        if (SeenTurns.contains(s.seen, t.turn_idx)) {
           s = s.copy(dups = s.dups + 1)
           None
         } else {
           val ooo = t.turn_idx < s.maxTurn
-          s = s.copy(seen = s.seen + t.turn_idx, maxTurn = math.max(s.maxTurn, t.turn_idx))
+          s = s.copy(seen = SeenTurns.insert(s.seen, t.turn_idx),
+            maxTurn = math.max(s.maxTurn, t.turn_idx))
           Some(DedupedTurn(t.conv_id, t.turn_idx, t.role, t.text, t.tool, t.ts, ooo))
         }
       }.toVector // drain before returning the state

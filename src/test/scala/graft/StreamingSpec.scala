@@ -469,6 +469,32 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("a repeated StreamValidate drain compiles no generated code") {
+    // Spark caches compiled classes per class loader; a second identical
+    // drain (same plans, same watermarks) must find every class it needs
+    // in the cache, in every micro-batch, with and without dedup state
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val in = tmp("in_cg")
+    TranscriptGen.turnsDs(spark, 40, 10, 20).repartition(3).write.mode("append").parquet(in)
+    def drain(withDedup: Boolean): (Long, Int) = {
+      val out = tmp("out_cg"); val ck = tmp("ck_cg")
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val q = StreamValidate.start(spark, StreamValidate.Config(in, out, ck,
+        withDedup = withDedup, maxFilesPerTrigger = 1, availableNow = true),
+        TranscriptGen.catalog)
+      q.awaitTermination(); q.stop()
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      (compiled, new ExactlyOnceSink(out).committedBatches().size)
+    }
+    for (withDedup <- Seq(true, false)) {
+      val (first, _) = drain(withDedup)
+      val (again, batches) = drain(withDedup)
+      assert(batches >= 2, s"dedup=$withDedup: expected several micro-batches, got $batches")
+      assert(again == 0, s"dedup=$withDedup: the repeated drain compiled $again classes " +
+        s"(the first one $first)")
+    }
+  }
+
   test("sink read rejects an unknown output kind before any batch commits") {
     val sink = new ExactlyOnceSink(tmp("out_kind"))
     assert(sink.committedBatches().isEmpty)
