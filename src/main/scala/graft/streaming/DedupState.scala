@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.ByteBuffer
 import java.sql.Timestamp
+import scala.collection.mutable
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.model.Turn
 
@@ -24,43 +25,30 @@ final case class DedupedTurn(
   */
 final case class ConvState(seen: Array[Byte], maxTurn: Int, dups: Long)
 
-/** The seen-turn set of a [[ConvState]]: distinct turn indices in
-  * ascending order, 4 big-endian bytes each. A lookup is a binary
-  * search; an insert copies the array once.
+/** The stored form of a [[ConvState]]'s seen turns: distinct turn indices
+  * in ascending order, 4 big-endian bytes each. The fold decodes it once
+  * per key and micro-batch into a hash set and encodes it once when it
+  * returns the state, so each row costs one hash lookup however many turns
+  * the conversation already has.
   */
 private[graft] object SeenTurns {
 
   val empty: Array[Byte] = Array.emptyByteArray
 
-  /** Position of `turn`, or -(insertion point) - 1. */
-  private def search(seen: Array[Byte], turn: Int): Int = {
-    val buf = ByteBuffer.wrap(seen)
-    var lo = 0
-    var hi = seen.length / 4 - 1
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      val v = buf.getInt(mid * 4)
-      if (v < turn) lo = mid + 1
-      else if (v > turn) hi = mid - 1
-      else return mid
-    }
-    -(lo + 1)
+  def decode(seen: Array[Byte]): mutable.HashSet[Int] = {
+    val ints = ByteBuffer.wrap(seen).asIntBuffer()
+    val set = mutable.HashSet.empty[Int]
+    set.sizeHint(ints.remaining)
+    while (ints.hasRemaining) set += ints.get()
+    set
   }
 
-  def contains(seen: Array[Byte], turn: Int): Boolean = search(seen, turn) >= 0
-
-  /** `seen` with `turn` added; `seen` itself when it already holds it. */
-  def insert(seen: Array[Byte], turn: Int): Array[Byte] = {
-    val at = search(seen, turn)
-    if (at >= 0) seen
-    else {
-      val off = (-at - 1) * 4
-      val next = new Array[Byte](seen.length + 4)
-      System.arraycopy(seen, 0, next, 0, off)
-      ByteBuffer.wrap(next).putInt(off, turn)
-      System.arraycopy(seen, off, next, off + 4, seen.length - off)
-      next
-    }
+  def encode(set: collection.Set[Int]): Array[Byte] = {
+    val sorted = set.toArray
+    java.util.Arrays.sort(sorted)
+    val bytes = ByteBuffer.allocate(sorted.length * 4)
+    bytes.asIntBuffer().put(sorted)
+    bytes.array()
   }
 }
 
@@ -88,19 +76,21 @@ object DedupState {
     EventTimeState.closing(
         turns.withWatermark("ts", watermark).groupByKey(_.conv_id), gap,
         (t: Turn) => t.ts) { (_, rows, prev: Option[ConvState]) =>
-      var s = prev.getOrElse(ConvState(SeenTurns.empty, -1, 0L))
+      val s0 = prev.getOrElse(ConvState(SeenTurns.empty, -1, 0L))
+      val seen = SeenTurns.decode(s0.seen)
+      var maxTurn = s0.maxTurn
+      var dups = s0.dups
       val out = rows.flatMap { t =>
-        if (SeenTurns.contains(s.seen, t.turn_idx)) {
-          s = s.copy(dups = s.dups + 1)
+        if (!seen.add(t.turn_idx)) {
+          dups += 1
           None
         } else {
-          val ooo = t.turn_idx < s.maxTurn
-          s = s.copy(seen = SeenTurns.insert(s.seen, t.turn_idx),
-            maxTurn = math.max(s.maxTurn, t.turn_idx))
+          val ooo = t.turn_idx < maxTurn
+          maxTurn = math.max(maxTurn, t.turn_idx)
           Some(DedupedTurn(t.conv_id, t.turn_idx, t.role, t.text, t.tool, t.ts, ooo))
         }
       }.toVector // drain before returning the state
-      (s, out)
+      (ConvState(SeenTurns.encode(seen), maxTurn, dups), out)
     }
   }
 

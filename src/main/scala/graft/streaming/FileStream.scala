@@ -23,15 +23,18 @@ import graft.io.LocalFs
   * otherwise start a `chmod` or `readlink` process for most checkpoint,
   * state-store and sink files, hundreds per micro-batch.
   *
-  * The session also runs with `spark.sql.artifact.isolation.enabled=false`.
-  * Each streaming query runs in a cloned session with a new id; with
-  * isolation on, every job carries that id and the executor builds a new
-  * class loader for it. Spark caches compiled classes per class loader, so
-  * every `start` compiled each generated class again (about 20 per
-  * `StreamValidate` drain, most of them byte-identical to the previous
-  * drain's), the first micro-batch's other tasks waited on the compile
-  * lock, and the JIT started cold on the fresh classes. graft adds no
-  * session artifacts, so the isolation guards nothing here.
+  * `start` also sets `spark.sql.artifact.isolation.enabled=false` on the
+  * caller's session and leaves it set, as it leaves the [[graft.io.LocalFs]]
+  * keys: every later query on that session, batch jobs included, and every
+  * session cloned from it runs without artifact isolation. Each streaming
+  * query runs in a cloned session with a new id; with isolation on, every
+  * job carries that id and the executor builds a new class loader for it.
+  * Spark caches compiled classes per class loader, so every `start`
+  * compiled each generated class again (about 20 per `StreamValidate`
+  * drain, most of them byte-identical to the previous drain's), the first
+  * micro-batch's other tasks waited on the compile lock, and the JIT
+  * started cold on the fresh classes. graft adds no session artifacts, so
+  * the isolation guards nothing here.
   */
 private[streaming] object FileStream {
 

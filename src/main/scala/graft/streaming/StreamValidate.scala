@@ -22,8 +22,8 @@ import graft.validate.ValidationPipeline
   * NARROW — no shuffle at all. The only exchange is the one Spark inserts
   * for the conv_id-keyed dedup state, which is hash-partitioned over
   * `spark.sql.shuffle.partitions`; a hot conversation lands on one
-  * partition but its cost is a binary search over the conversation's
-  * seen turns per row ([[SeenTurns]]), so skew shows up only
+  * partition but its cost is a hash lookup per row (the seen set is
+  * decoded and encoded once per batch, [[SeenTurns]]), so skew shows up only
   * if one conversation dominates the whole stream volume — tracked by the
   * sink's per-partition `metrics` view.
   */

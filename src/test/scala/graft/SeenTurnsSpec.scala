@@ -4,9 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.streaming.SeenTurns
 
-/** The dedup state's binary seen-turn codec behaves as the `Set[Int]` it
-  * replaced: same membership after every insert, duplicates leave it as it
-  * is, one 4-byte entry per distinct turn.
+/** The dedup state's binary seen-turn form behaves as the `Set[Int]` it
+  * replaced: carried across micro-batches through `decode`/`encode`, it
+  * holds the same turns after every insert, a duplicate insert is
+  * reported and changes nothing, and the bytes are the distinct turns in
+  * ascending order, 4 each.
   */
 class SeenTurnsSpec extends AnyFunSuite {
 
@@ -22,29 +24,39 @@ class SeenTurnsSpec extends AnyFunSuite {
     3 -> Gen.choose(Int.MinValue, Int.MaxValue),
     1 -> Gen.oneOf(Int.MinValue, Int.MinValue + 1, -1, 0, 1, Int.MaxValue - 1, Int.MaxValue))
 
-  test("insert and contains agree with Set[Int] on arbitrary Int sequences") {
-    check(Prop.forAll(Gen.listOf(turn), Gen.listOf(turn)) { (ins, probes) =>
-      var seen = SeenTurns.empty
+  private def ints(bytes: Array[Byte]): Seq[Int] = {
+    val buf = java.nio.ByteBuffer.wrap(bytes).asIntBuffer()
+    Seq.fill(buf.remaining)(buf.get())
+  }
+
+  test("insert and contains agree with Set[Int] across micro-batches") {
+    check(Prop.forAll(Gen.listOf(Gen.listOf(turn)), Gen.listOf(turn)) { (batches, probes) =>
+      var stored = SeenTurns.empty
       var set = Set.empty[Int]
-      ins.forall { t =>
-        val was = SeenTurns.contains(seen, t)
-        val next = SeenTurns.insert(seen, t)
-        val ok = was == set.contains(t) && (!was || (next eq seen)) &&
-          SeenTurns.contains(next, t)
-        seen = next
-        set += t
-        ok && seen.length == 4 * set.size
-      } && (ins ++ probes).forall(t => SeenTurns.contains(seen, t) == set.contains(t))
+      batches.forall { batch =>
+        val seen = SeenTurns.decode(stored)
+        val ok = batch.forall { t =>
+          val was = seen.contains(t)
+          val added = seen.add(t)
+          val agree = was == set.contains(t) && added == !was && seen.contains(t)
+          set += t
+          agree
+        }
+        stored = SeenTurns.encode(seen)
+        ok && ints(stored) == set.toSeq.sorted
+      } && (batches.flatten ++ probes).forall(t => SeenTurns.decode(stored).contains(t) == set.contains(t))
     })
   }
 
   test("the extremes and zero") {
     val all = Seq(Int.MaxValue, 0, Int.MinValue, -1, Int.MaxValue, Int.MinValue)
-    val seen = all.foldLeft(SeenTurns.empty)(SeenTurns.insert)
-    assert(seen.length == 16)
-    all.foreach(t => assert(SeenTurns.contains(seen, t), t))
-    Seq(1, -2, Int.MinValue + 1, Int.MaxValue - 1)
-      .foreach(t => assert(!SeenTurns.contains(seen, t), t))
-    assert(!SeenTurns.contains(SeenTurns.empty, 0))
+    val stored = SeenTurns.encode(all.toSet)
+    assert(stored.length == 16)
+    assert(ints(stored) == Seq(Int.MinValue, -1, 0, Int.MaxValue))
+    val seen = SeenTurns.decode(stored)
+    all.foreach(t => assert(seen.contains(t), t))
+    Seq(1, -2, Int.MinValue + 1, Int.MaxValue - 1).foreach(t => assert(!seen.contains(t), t))
+    assert(SeenTurns.decode(SeenTurns.empty).isEmpty)
+    assert(SeenTurns.encode(Set.empty[Int]).isEmpty)
   }
 }

@@ -372,6 +372,35 @@ class StreamingSpec extends SparkSpec {
     assert(rows.length == 4, rows.mkString(","))
   }
 
+  test("stateful dedup: a hot conversation of 50k turns in one micro-batch") {
+    // one conversation with 50k turns in a single batch, then a batch of
+    // replays, a turn below the conversation's max and a new turn. The
+    // seen set must be decoded and encoded once per key and batch, not
+    // copied per row, or this batch is quadratic in its length
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[Turn]
+    val q = DedupState.dedup(spark, mem.toDS(), "1 minute", "5 minutes")
+      .writeStream.outputMode("append").format("memory")
+      .queryName("dedup_hot").start()
+    def t(i: Int) = Turn("HOT", i, "user", s"m$i", null, ts(0))
+    val n = 50000
+    mem.addData((0 until n).filter(_ != 7).map(t) :+ t(3) :+ t(n - 1))
+    val t0 = System.nanoTime()
+    q.processAllAvailable()
+    val firstMs = (System.nanoTime() - t0) / 1000000
+    mem.addData(Seq(t(0), t(n / 2), t(7), t(n + 1), t(n + 1)))
+    q.processAllAvailable()
+    q.stop()
+    info(s"50k-turn batch: $firstMs ms")
+    val rows = spark.table("dedup_hot").select("turn_idx", "out_of_order")
+      .as[(Int, Boolean)].collect()
+    assert(rows.length == n + 1, s"${rows.length} rows")
+    assert(rows.map(_._1).toSet == ((0 until n).toSet + (n + 1)))
+    val ooo = rows.collect { case (i, true) => i }.toSet
+    assert(ooo(7) && !ooo(n + 1), s"out_of_order: ${ooo.take(10)}")
+  }
+
   test("stateful dedup runs on the RocksDB state store provider") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
@@ -478,6 +507,9 @@ class StreamingSpec extends SparkSpec {
     TranscriptGen.turnsDs(spark, 40, 10, 20).repartition(3).write.mode("append").parquet(in)
     def drain(withDedup: Boolean): (Long, Int) = {
       val out = tmp("out_cg"); val ck = tmp("ck_cg")
+      // the key FileStream.start sets: an earlier stream's setting on this
+      // shared session must not stand in for a missing one
+      spark.conf.unset("spark.sql.artifact.isolation.enabled")
       val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val q = StreamValidate.start(spark, StreamValidate.Config(in, out, ck,
         withDedup = withDedup, maxFilesPerTrigger = 1, availableNow = true),
