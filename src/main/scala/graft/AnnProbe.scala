@@ -1,25 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Scratch ANN probe: brute vs IVF wall time and recall@10 on the bench
-  * embeddings corpus, sweeping kmeansIters. Not part of the driver
-  * contract — this is how the nlist/nprobe/kmeansIters operating point in
-  * Bench phase 4 was chosen.
+/** Diagnostic ANN probe: brute vs IVF wall time and recall@10 on an
+  * embeddings corpus, sweeping kmeansIters. Outside the bench and verify
+  * entry points — this is how the nlist/nprobe/kmeansIters operating point
+  * in Bench phase 4 was chosen (on its 100k-vector `embeddings.parquet`).
+  *
+  * usage: runMain graft.AnnProbe <embeddings.parquet> [kmeansIters]
   */
 object AnnProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val annN = sys.env.getOrElse("SPARK_GRAFT_ANN_N", "100000").toInt
-    val iters = args.headOption.map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val emb = spark.read.parquet(s"/root/repo/data/emb_bench_$annN/embeddings.parquet")
+    require(args.nonEmpty, "usage: graft.AnnProbe <embeddings.parquet> [kmeansIters]")
+    val iters = args.lift(1).map(_.toInt).getOrElse(2)
+    val spark = Profile.session()
+    val emb = spark.read.parquet(args(0))
+    val annN = emb.count()
 
     def time[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
@@ -34,7 +28,7 @@ object AnnProbe {
       val (_, iSec) = time(ivf.count())
       val hits = ivf.select("q_id", "vec_id")
         .join(brute.select("q_id", "vec_id"), Seq("q_id", "vec_id")).count()
-      val recall = hits.toDouble / (annN.toLong / 200 * 10)
+      val recall = hits.toDouble / (annN / 200 * 10)
       println(f"[ann] ivf iters=$it: $iSec%.2f s, recall@10 $recall%.3f")
     }
     spark.stop()

@@ -19,9 +19,6 @@ final case class CurLane(band: Int, bucket: String, doc_id: Long,
 final case class CurVerdict(doc_id: Long, band: Int, dropped: Boolean,
     lang_pred: String, ws_tokens: Int, ts: Timestamp)
 
-final case class CurMember(doc_id: Long, sig: Seq[Long])
-final case class CurBucketState(members: List[CurMember], saturated: Boolean)
-
 /** ONLINE end-to-end curation — the streaming composition of the batch
   * `ops.Curation.curateMinhash` pipeline as ONE running query:
   *
@@ -50,9 +47,9 @@ final case class CurBucketState(members: List[CurMember], saturated: Boolean)
   * full corpus — while a stream can only saturate PROSPECTIVELY, so docs
   * that matched a member before the bucket crossed the cap stay dropped.
   *
-  * State law (same as [[StreamDedup]]): bounded by ACTIVE buckets x
-  * maxBucket signatures, saturation frees members prospectively, and a
-  * bucket closes `gap` after its newest event ([[EventTimeState]]).
+  * State law: the MinHash lanes share [[StreamDedup]]'s [[LshBucket]], so
+  * state is bounded by ACTIVE buckets x maxBucket signatures, and a bucket
+  * closes `gap` after its newest event ([[EventTimeState]]).
   * Dropped documents still join bucket state — the batch pair set also
   * contains pairs involving dropped docs, and a dropped doc must keep
   * suppressing its later copies.
@@ -114,39 +111,22 @@ object StreamCuration {
       .withWatermark("ts", cfg.watermark)
       .as[CurLane]
 
-    val numHashes = cfg.numHashes
-    val threshold = cfg.threshold
-    val maxBucket = cfg.maxBucket
     EventTimeState.closing(lanes.groupByKey(l => (l.band, l.bucket)), cfg.gap,
-        (l: CurLane) => l.ts) { (key, rows, prev: Option[CurBucketState]) =>
-      var s = prev.getOrElse(CurBucketState(Nil, saturated = false))
-      val out = Vector.newBuilder[CurVerdict]
+        (l: CurLane) => l.ts) { (key, rows, prev: Option[LshBucketState]) =>
+      def verdict(d: CurLane, dropped: Boolean) =
+        CurVerdict(d.doc_id, key._1, dropped, d.lang_pred, d.ws_tokens, d.ts)
       // id-order within the batch = the batch keep-smallest rule
-      rows.toVector.sortBy(_.doc_id).foreach { d =>
-        if (!s.members.exists(_.doc_id == d.doc_id)) {
-          val dropped =
-            if (s.saturated) false // capped bucket votes keep (batch: excluded)
-            else if (key._1 == -1) s.members.nonEmpty // exact dup of an earlier doc
-            else s.members.exists { m =>
-              var eq = 0
-              var i = 0
-              while (i < numHashes) { if (m.sig(i) == d.sig(i)) eq += 1; i += 1 }
-              eq.toDouble / numHashes >= threshold
-            }
-          out += CurVerdict(d.doc_id, key._1, dropped, d.lang_pred,
-            d.ws_tokens, d.ts)
-          s =
-            if (key._1 == -1)
-              // the exact lane only needs "seen": one sentinel member
-              if (s.members.isEmpty) CurBucketState(CurMember(d.doc_id, Nil) :: Nil, false)
-              else s
-            else if (s.saturated) s
-            else if (s.members.length + 1 >= maxBucket)
-              CurBucketState(Nil, saturated = true) // free memory
-            else CurBucketState(CurMember(d.doc_id, d.sig) :: s.members, false)
-        }
+      val sorted = rows.toVector.sortBy(_.doc_id)
+      if (key._1 != -1)
+        // a saturated bucket matches nothing, so it votes keep (batch: excluded)
+        LshBucket.fold(prev, sorted.iterator, cfg.maxBucket, cfg.threshold)(_.doc_id,
+          _.sig.toArray, LshBucket.agreement)((d, m) => Some(verdict(d, m.hasNext)))
+      else { // the exact lane never saturates; its first doc is its one member
+        val seen = prev.flatMap(LshBucket.ids(_).headOption)
+        val first = seen.getOrElse(sorted.head.doc_id) // a fold call has >= 1 row
+        val dups = sorted.filter(_.doc_id != first).map(verdict(_, dropped = true))
+        (LshBucket.single(first), if (seen.isEmpty) verdict(sorted.head, false) +: dups else dups)
       }
-      (s, out.result())
     }
   }
 

@@ -15,9 +15,7 @@ import org.apache.spark.sql.functions._
 class BucketingSpec extends SparkSpec {
 
   test("bucketed co-located join plans with no shuffle exchange") {
-    val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
         .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
         .mode("overwrite").saveAsTable("orders_bucketed")
@@ -47,7 +45,6 @@ class BucketingSpec extends SparkSpec {
         .collect { case e: ShuffleExchangeExec => e }
       assert(plainShuffles.size == 2, s"expected 2 exchanges, got $plainShuffles")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
       spark.sql("DROP TABLE IF EXISTS orders_bucketed")
       spark.sql("DROP TABLE IF EXISTS lineitem_bucketed")
     }

@@ -181,9 +181,7 @@ class JoinsSpec extends SparkSpec {
   }
 
   test("q3 join falls back to sort-merge when broadcast is disabled (SMJ path)") {
-    val orig = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val q3 = Joins.topRevenueOrders(
         spark.read.parquet("/root/testdata/sf0.001/customer.parquet"),
         spark.read.parquet("/root/testdata/sf0.001/orders.parquet"),
@@ -193,7 +191,7 @@ class JoinsSpec extends SparkSpec {
       val s = q3.queryExecution.executedPlan.toString
       assert(s.contains("SortMergeJoin"), s.take(1500))
       assert(s.contains("TakeOrderedAndProject"), s.take(1500))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", orig)
+    }
   }
 
   test("q3 revenue descends and respects the cutoff filters") {

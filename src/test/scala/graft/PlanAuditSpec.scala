@@ -218,27 +218,19 @@ class PlanAuditSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/fact")
     spark.range(200000).select(col("id").as("pk"), (col("id") % 97).as("attr"))
       .write.mode("overwrite").parquet(s"$dir/dim")
-    val conf = spark.conf
-    val saved = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> conf.getOption(k))
-    try {
-      conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB")
+    withConf(
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
       // default 10GB — the rule only fires when the PROBE side is big;
       // shrink so the test corpus qualifies (prod keeps the default)
-      conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force shuffle join
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") { // force shuffle join
       val fact = spark.read.parquet(s"$dir/fact")
       val dim = spark.read.parquet(s"$dir/dim").filter(col("attr") === 3) // ~1%
       val q = fact.join(dim, col("fk") === col("pk")).select("fk", "payload")
       val s = q.queryExecution.optimizedPlan.toString + "\n" + plan(q)
       assert(s.toLowerCase.contains("might_contain"), s.take(3000))
-    } finally saved.foreach { case (k, v) =>
-      v.fold(conf.unset(k))(conf.set(k, _)) }
+    }
   }
 
   test("CC rounds: hash-agg minima + equi-joins, no Window/cartesian/adjacency sort") {

@@ -65,9 +65,7 @@ class RelationalSpec extends SparkSpec {
       TranscriptGen.attributeDefs.toDF(), enableBlacklist = true,
       broadcastDims = bcast)
     val before = canon(run(bcast = true))
-    val prev = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val fallback = run(bcast = false)
       val plan = fallback.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastHashJoin"),
@@ -79,9 +77,6 @@ class RelationalSpec extends SparkSpec {
       before.foreach { case (k, v) =>
         assert(after(k) == v, s"decision changed under shuffle-join fallback @ $k")
       }
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
-      case None => spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 }

@@ -12,17 +12,14 @@ import org.apache.spark.sql.functions._
 class SkewJoinSpec extends SparkSpec {
 
   test("AQE splits the hot-key partition: SortMergeJoin(isSkewJoin=true)") {
-    val confs = Seq(
+    withConf(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       // test-scale thresholds: the hot partition is ~30 MB, siblings ~1 MB
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "2m",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1m",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // 90% of left rows share key 0 (a hot o_orderkey); the payload pad
       // makes the hot shuffle partition comfortably exceed the threshold
       val left = spark.range(400000).select(
@@ -42,9 +39,6 @@ class SkewJoinSpec extends SparkSpec {
       assert(smjs.nonEmpty, s"expected a sort-merge join: $show")
       assert(smjs.exists(_.isSkewJoin),
         s"AQE did not mark the join skew-split: $show")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -18,6 +18,16 @@ trait SparkSpec extends AnyFunSuite {
       java.nio.file.Files.createTempDirectory("graft_wh").toString)
     .getOrCreate()
 
+  /** Runs `body` with the session confs `kvs` set, then gives each key its
+    * previous value back (or unsets it).
+    */
+  def withConf[A](kvs: (String, String)*)(body: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   /** Flatten an executed plan INCLUDING the interiors of AQE query stages
     * (QueryStageExec is a leaf to TreeNode traversal — a plain `collect`
     * on an adaptively executed plan sees none of the real operators).

@@ -128,6 +128,34 @@ class StreamCurationSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("the exact lane never saturates: copies past maxBucket are still dropped") {
+    // four exact copies over two micro-batches with maxBucket = 2: every
+    // MinHash bucket saturates at the second copy and votes keep from then
+    // on, so only the exact lane's one member drops copies 3 and 4
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[(Long, String, Timestamp)]
+    val q = StreamCuration.verdicts(spark, mem.toDS().toDF("doc_id", "text", "ts"),
+        StreamCuration.Config(inputDir = "", outDir = "", checkpointDir = "", maxBucket = 2))
+      .writeStream.format("memory").queryName("sc_exact_cap")
+      .outputMode("append").start()
+    def ts(sec: Long) = new Timestamp((TranscriptGen.BaseEpoch + sec) * 1000L)
+    val text = "alpha beta gamma delta epsilon zeta eta theta"
+    try {
+      Seq(Seq(1L, 2L), Seq(3L, 4L)).foreach { ids =>
+        mem.addData(ids.map(id => (id, text, ts(id))): _*)
+        q.processAllAvailable()
+      }
+      val lanes = spark.table("sc_exact_cap").select("doc_id", "band", "dropped")
+        .as[(Long, Int, Boolean)].collect()
+      val dropped = lanes.groupBy(_._1).map { case (id, vs) => id -> vs.exists(_._3) }
+      assert(dropped == Map(1L -> false, 2L -> true, 3L -> true, 4L -> true), dropped)
+      val late = lanes.filter(_._1 >= 3)
+      assert(late.filter(_._2 >= 0).forall(!_._3), "a saturated MinHash lane dropped a copy")
+      assert(late.count(l => l._2 == -1 && l._3) == 2, late.toSeq)
+    } finally q.stop()
+  }
+
   test("plan: exactly ONE stateful operator; the state exchange is the only shuffle") {
     // The design claim: lane fan-out and gate columns are narrow; the
     // (band, bucket)-keyed state inserts the single exchange; the per-doc

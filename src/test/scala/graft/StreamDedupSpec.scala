@@ -175,27 +175,39 @@ class StreamDedupSpec extends SparkSpec {
 
   test("a saturated bucket stops emitting and frees its members") {
     import spark.implicits._
-    // 30 identical texts → every band bucket holds all of them; cap at 5
-    val in = Files.createTempDirectory("graft_sd_sat").toString
-    (0 until 30).map(i => (i.toLong, "same words in every single document here", ts(i)))
-      .toDF("doc_id", "text", "ts")
-      .coalesce(1).write.mode("append").parquet(in)
-    val stream = spark.readStream.schema(baseDocs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    val pairs = StreamDedup.nearDupPairs(spark, stream,
-      numHashes = 64, bands = 16, threshold = 0.3, maxBucket = 5)
-    val q = pairs.writeStream.format("memory").queryName("sd_sat")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val distinctPairs = spark.sql("select distinct doc_a, doc_b from sd_sat")
-        .count()
+    /** Streams `rows` as one file; returns the distinct (a, b) pairs. */
+    def pairCount(name: String, rows: DataFrame)(op: DataFrame => DataFrame): Long = {
+      val in = Files.createTempDirectory(s"graft_$name").toString
+      rows.coalesce(1).write.mode("append").parquet(in)
+      val stream = spark.readStream.schema(rows.schema)
+        .option("maxFilesPerTrigger", 1).parquet(in)
+      val q = op(stream).writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        spark.table(name).toDF("a", "b", "score", "ts").select("a", "b").distinct().count()
+      } finally q.stop()
+    }
+    // 30 identical texts → every band bucket holds all of them; cap at 5.
+    // The same for 30 identical vectors in one hyperplane bucket
+    val text = pairCount("sd_sat", (0 until 30)
+        .map(i => (i.toLong, "same words in every single document here", ts(i)))
+        .toDF("doc_id", "text", "ts")) { in =>
+      StreamDedup.nearDupPairs(spark, in,
+        numHashes = 64, bands = 16, threshold = 0.3, maxBucket = 5).toDF()
+    }
+    val vector = pairCount("sd_vec_sat", (0 until 30)
+        .map(i => (i.toLong, Seq(1.0, 0.5, 0.25, 0.0), ts(i)))
+        .toDF("vec_id", "embedding", "ts")) { in =>
+      StreamDedup.nearDupVectorPairs(spark, in, maxBucket = 5).toDF()
+    }
+    for ((kind, distinctPairs) <- Seq("text" -> text, "vector" -> vector)) {
       // unbounded would be C(30,2)=435 pairs; the cap bounds it to the
-      // pre-saturation pairs C(5,2)=10 at most (identical sigs → all
+      // pre-saturation pairs C(5,2)=10 at most (identical payloads → all
       // bands agree on membership)
-      assert(distinctPairs <= 10, s"saturated bucket kept emitting: $distinctPairs pairs")
-      assert(distinctPairs > 0, "expected some pre-saturation pairs")
-    } finally q.stop()
+      assert(distinctPairs <= 10, s"$kind: saturated bucket kept emitting: $distinctPairs pairs")
+      assert(distinctPairs > 0, s"$kind: expected some pre-saturation pairs")
+    }
   }
 
   test("vector near-dup: cross-batch exact-duplicate discovery, batch-operator parity") {
@@ -233,33 +245,5 @@ class StreamDedupSpec extends SparkSpec {
       assert(got == batch,
         s"stream-only: ${got -- batch}; batch-only: ${batch -- got}")
     } finally q.stop()
-  }
-
-  test("collapsePairs=true emits each pair exactly once (conf-gated chained dedup)") {
-    val in = Files.createTempDirectory("graft_sd_cp").toString
-    baseDocs.unionByName(copyDocs).coalesce(1).write.mode("append").parquet(in)
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled")
-    spark.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-    try {
-      val stream = spark.readStream.schema(baseDocs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-      val pairs = StreamDedup.nearDupPairs(spark, stream,
-        numHashes = 64, bands = 16, threshold = 0.3, maxBucket = 10000,
-        collapsePairs = true)
-      val q = pairs.writeStream.format("memory").queryName("sd_cp")
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable()
-        val raw = spark.sql("select doc_a, doc_b from sd_cp").collect()
-        assert(raw.nonEmpty)
-        assert(raw.length == raw.distinct.length, "duplicate pair emissions survived")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(
-        "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", v)
-      case None => spark.conf.unset(
-        "spark.sql.streaming.statefulOperator.checkCorrectness.enabled")
-    }
   }
 }

@@ -404,10 +404,8 @@ class StreamingSpec extends SparkSpec {
   test("stateful dedup runs on the RocksDB state store provider") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val mem = MemoryStream[Turn]
       val q = DedupState.dedup(spark, mem.toDS(), "1 minute", "5 minutes")
         .writeStream.outputMode("append").format("memory")
@@ -417,11 +415,6 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable(); q.stop()
       val rows = spark.table("dedup_rocks").select("turn_idx").as[Int].collect().sorted
       assert(rows.toSeq == Seq(0, 1))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -458,13 +451,11 @@ class StreamingSpec extends SparkSpec {
         docs.select($"doc_id", $"text", t0.as("ts")).coalesce(1).write.mode("append").parquet(in)
         ("StreamCuration", out, ck, 1, () => StreamCuration.start(spark,
           StreamCuration.Config(in, out, ck, availableNow = true))) })
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val rec = new jdk.jfr.Recording()
     rec.enable("jdk.ProcessStart")
     val dump = Paths.get(tmp("jfr"), "drain.jfr")
-    try {
+    try withConf("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       rec.start()
       // a process the recording must see, so "none seen" is not vacuous
       new ProcessBuilder("true", "graft-jfr-control").start().waitFor()
@@ -478,13 +469,7 @@ class StreamingSpec extends SparkSpec {
       }
       rec.stop()
       rec.dump(dump)
-    } finally {
-      rec.close()
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally rec.close()
     val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
       .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command"))
     assert(commands.exists(_.contains("graft-jfr-control")), commands.mkString("\n"))
@@ -524,6 +509,48 @@ class StreamingSpec extends SparkSpec {
       assert(batches >= 2, s"dedup=$withDedup: expected several micro-batches, got $batches")
       assert(again == 0, s"dedup=$withDedup: the repeated drain compiled $again classes " +
         s"(the first one $first)")
+    }
+  }
+
+  test("a repeated near-dup or curation stream compiles no generated code") {
+    // the LSH bucket state is flat binary fields, so a repeated run of each
+    // bucket operator finds every class it needs, the state decoder
+    // included, in Spark's compiled-class cache
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import spark.implicits._
+    // 60 docs and 60 vectors with near-duplicates among them, 3 files each
+    val docs = tmp("in_cg_docs"); val vecs = tmp("in_cg_vecs")
+    (0 until 60).map(i => (i.toLong, s"the quick brown fox ${i % 20} jumps over the lazy dog", ts(i)))
+      .toDF("doc_id", "text", "ts").repartition(3).write.mode("append").parquet(docs)
+    (0 until 60).map(i => (i.toLong, Seq(1.0, (i % 4).toDouble, 0.5, (i % 3).toDouble), ts(i)))
+      .toDF("vec_id", "embedding", "ts").repartition(3).write.mode("append").parquet(vecs)
+    def stream(in: String): DataFrame = spark.readStream
+      .schema(spark.read.parquet(in).schema).option("maxFilesPerTrigger", 1).parquet(in)
+    def toNoop(pairs: DataFrame): StreamingQuery = pairs.writeStream.format("noop")
+      .option("checkpointLocation", tmp("ck_cg_lsh"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    val ops: Seq[(String, () => StreamingQuery)] = Seq(
+      "StreamDedup.nearDupPairs" ->
+        (() => toNoop(StreamDedup.nearDupPairs(spark, stream(docs), threshold = 0.3).toDF())),
+      "StreamDedup.nearDupVectorPairs" -> (() => toNoop(
+        StreamDedup.nearDupVectorPairs(spark, stream(vecs), planes = 8, threshold = 0.35).toDF())),
+      "StreamCuration.start" -> (() => StreamCuration.start(spark, StreamCuration.Config(
+        docs, tmp("out_cg_cur"), tmp("ck_cg_cur"), maxFilesPerTrigger = 1, availableNow = true))))
+    // isolation off as FileStream.start sets it, for the two plain queries
+    withConf("spark.sql.artifact.isolation.enabled" -> "false") {
+      for ((name, start) <- ops) {
+        def run(): (Long, Int) = {
+          val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+          val q = start()
+          q.awaitTermination(); q.stop()
+          (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before,
+            q.recentProgress.count(_.numInputRows > 0))
+        }
+        val (first, _) = run()
+        val (again, batches) = run()
+        assert(batches >= 2, s"$name: expected several micro-batches, got $batches")
+        assert(again == 0, s"$name: the repeated run compiled $again classes (the first $first)")
+      }
     }
   }
 
@@ -629,9 +656,6 @@ class StreamingSpec extends SparkSpec {
     val in = tmp("in_chaos")
     TranscriptGen.turnsDs(spark, 100000, 10, 0).repartition(16)
       .write.mode("append").parquet(in)
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // Spark 4.1's state-store commit validation is tracked by the
     // application-global StateStoreCoordinator: the deliberate mid-batch
     // kill leaves that batch's partial commit bookkeeping behind, and the
@@ -642,10 +666,9 @@ class StreamingSpec extends SparkSpec {
     // coordinator, so the race is a same-process harness artifact;
     // exactly-once is judged by the post-resume output-equality
     // assertions below, not by the validator.
-    val prevCv = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.commitValidation.enabled")
-    spark.conf.set("spark.sql.streaming.stateStore.commitValidation.enabled", "false")
-    try {
+    withConf("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.commitValidation.enabled" -> "false") {
       // watermark >> corpus span so late-drop behavior cannot depend on
       // batch boundaries — the comparison isolates exactly-once delivery
       val outA = tmp("out_chaos_a"); val ckA = tmp("ck_chaos_a")
@@ -685,17 +708,6 @@ class StreamingSpec extends SparkSpec {
         assert(a.count() == b.count(), s"$table row count differs")
         assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
           s"$table content differs after kill+resume")
-      }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      prevCv match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.streaming.stateStore.commitValidation.enabled", v)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.commitValidation.enabled")
       }
     }
   }
