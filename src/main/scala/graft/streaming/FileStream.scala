@@ -35,6 +35,24 @@ import graft.io.LocalFs
   * micro-batch's other tasks waited on the compile lock, and the JIT
   * started cold on the fresh classes. graft adds no session artifacts, so
   * the isolation guards nothing here.
+  *
+  * One state-store policy for every stream's keyed state: `start` sets
+  * `spark.sql.streaming.stateStore.providerClass` to Spark's
+  * `RocksDBStateStoreProvider` with
+  * `spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled`,
+  * and leaves both set on the session, as it leaves the isolation key (so
+  * a stateful query that does not go through `start` runs whatever store
+  * its session holds, this one once a stream has started there). A
+  * micro-batch's commit then writes only that batch's changes as a
+  * changelog file per partition; a full snapshot is due every
+  * `minDeltasForSnapshot` (10) versions and is uploaded by the state
+  * store's maintenance thread, off the batch. Without changelogs every
+  * commit flushed RocksDB, made a local checkpoint, zipped and uploaded it
+  * and forked two `rm -rf` per partition, whatever the batch changed. A
+  * checkpoint written on another provider keeps it: Spark restores the
+  * provider class from the checkpoint's offset log. A RocksDB checkpoint
+  * written without changelogs resumes from its last snapshot and goes on
+  * with changelogs.
   */
 private[streaming] object FileStream {
 
@@ -51,6 +69,9 @@ private[streaming] object FileStream {
       writeBatch: (DataFrame, Long) => Unit): StreamingQuery = {
     LocalFs.use(spark)
     spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    spark.conf.set("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
     val source = spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)

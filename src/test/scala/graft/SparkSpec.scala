@@ -13,6 +13,11 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    // the state store FileStream.start sets, from the first query on, so a
+    // stateful query that does not go through FileStream runs it too
+    .config("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
     // saveAsTable targets (BucketingSpec) land in tmp, not the repo
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_wh").toString)

@@ -454,25 +454,44 @@ class StreamingSpec extends SparkSpec {
     val rec = new jdk.jfr.Recording()
     rec.enable("jdk.ProcessStart")
     val dump = Paths.get(tmp("jfr"), "drain.jfr")
-    try withConf("spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+    val windows = try {
       rec.start()
       // a process the recording must see, so "none seen" is not vacuous
       new ProcessBuilder("true", "graft-jfr-control").start().waitFor()
-      streams.foreach { case (_, _, _, _, start) =>
-        // the keys LocalFs.use sets: an earlier stream's registration on
-        // this shared session must not stand in for a missing one
-        Seq("fs.file.impl", "fs.file.impl.disable.cache", "fs.AbstractFileSystem.file.impl")
+      val w = streams.map { case (name, _, _, _, start) =>
+        // the keys LocalFs.use and FileStream.start's state-store policy
+        // set: an earlier stream's setting on this shared session must not
+        // stand in for a missing one
+        Seq("fs.file.impl", "fs.file.impl.disable.cache", "fs.AbstractFileSystem.file.impl",
+          "spark.sql.streaming.stateStore.providerClass",
+          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
           .foreach(spark.conf.unset)
+        val from = java.time.Instant.now()
         val q = start()
         q.awaitTermination(); q.stop()
-      }
+        name -> (from, java.time.Instant.now())
+      }.toMap
       rec.stop()
       rec.dump(dump)
+      w
     } finally rec.close()
-    val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
-      .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command"))
+    val starts = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
+      .filter(_.getEventType.getName == "jdk.ProcessStart")
+      .map(e => (e.getStartTime, e.getString("command")))
+    val commands = starts.map(_._2)
     assert(commands.exists(_.contains("graft-jfr-control")), commands.mkString("\n"))
+    // the dedup drain's RocksDB commits write changelogs: no local snapshot
+    // `checkpoint-<uuid>` dir is made, so none is deleted by a forked rm
+    val (from, until) = windows("StreamValidate")
+    val snapshotDeletes = starts.collect { case (t, c) if !t.isBefore(from) && !t.isAfter(until) &&
+      c.startsWith("rm ") && c.contains("checkpoint-") => c }
+    assert(snapshotDeletes.isEmpty, s"StreamValidate: ${snapshotDeletes.size} snapshot deletes, " +
+      s"e.g.\n${snapshotDeletes.take(5).mkString("\n")}")
+    val validateCk = streams.collectFirst { case ("StreamValidate", _, ck, _, _) => ck }.get
+    val stateFiles = Files.walk(Paths.get(validateCk, "state")).iterator().asScala
+      .map(_.getFileName.toString).toSeq
+    assert(stateFiles.exists(_.endsWith(".changelog")),
+      s"StreamValidate: no RocksDB changelog in its state dir: ${stateFiles.sorted.mkString(", ")}")
     streams.foreach { case (name, out, ck, batches, _) =>
       assert(new ManifestSink(out).committedBatches().size >= batches,
         s"$name: expected $batches micro-batches")
@@ -513,13 +532,15 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("a repeated near-dup or curation stream compiles no generated code") {
-    // the LSH bucket state is flat binary fields, so a repeated run of each
-    // bucket operator finds every class it needs, the state decoder
-    // included, in Spark's compiled-class cache
+    // the LSH bucket and CEP buffer states are flat binary fields, so a
+    // repeated run of each operator finds every class it needs, the state
+    // decoder included, in Spark's compiled-class cache
     import org.apache.spark.metrics.source.CodegenMetrics
     import spark.implicits._
-    // 60 docs and 60 vectors with near-duplicates among them, 3 files each
-    val docs = tmp("in_cg_docs"); val vecs = tmp("in_cg_vecs")
+    // 60 docs and 60 vectors with near-duplicates among them, 3 files each,
+    // and 3 files of transcript turns
+    val docs = tmp("in_cg_docs"); val vecs = tmp("in_cg_vecs"); val turns = tmp("in_cg_turns")
+    TranscriptGen.turnsDs(spark, 20, 6, 0).repartition(3).write.mode("append").parquet(turns)
     (0 until 60).map(i => (i.toLong, s"the quick brown fox ${i % 20} jumps over the lazy dog", ts(i)))
       .toDF("doc_id", "text", "ts").repartition(3).write.mode("append").parquet(docs)
     (0 until 60).map(i => (i.toLong, Seq(1.0, (i % 4).toDouble, 0.5, (i % 3).toDouble), ts(i)))
@@ -535,8 +556,10 @@ class StreamingSpec extends SparkSpec {
       "StreamDedup.nearDupVectorPairs" -> (() => toNoop(
         StreamDedup.nearDupVectorPairs(spark, stream(vecs), planes = 8, threshold = 0.35).toDF())),
       "StreamCuration.start" -> (() => StreamCuration.start(spark, StreamCuration.Config(
-        docs, tmp("out_cg_cur"), tmp("ck_cg_cur"), maxFilesPerTrigger = 1, availableNow = true))))
-    // isolation off as FileStream.start sets it, for the two plain queries
+        docs, tmp("out_cg_cur"), tmp("ck_cg_cur"), maxFilesPerTrigger = 1, availableNow = true))),
+      "StreamCep.searchRuns" ->
+        (() => toNoop(StreamCep.searchRuns(stream(turns), "1 minute", "5 minutes").toDF())))
+    // isolation off as FileStream.start sets it, for the plain queries
     withConf("spark.sql.artifact.isolation.enabled" -> "false") {
       for ((name, start) <- ops) {
         def run(): (Long, Int) = {
@@ -666,9 +689,7 @@ class StreamingSpec extends SparkSpec {
     // coordinator, so the race is a same-process harness artifact;
     // exactly-once is judged by the post-resume output-equality
     // assertions below, not by the validator.
-    withConf("spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.commitValidation.enabled" -> "false") {
+    withConf("spark.sql.streaming.stateStore.commitValidation.enabled" -> "false") {
       // watermark >> corpus span so late-drop behavior cannot depend on
       // batch boundaries — the comparison isolates exactly-once delivery
       val outA = tmp("out_chaos_a"); val ckA = tmp("ck_chaos_a")
@@ -710,6 +731,81 @@ class StreamingSpec extends SparkSpec {
           s"$table content differs after kill+resume")
       }
     }
+  }
+
+  test("a dedup checkpoint written on the HDFS or plain RocksDB store resumes on RocksDB changelogs") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    // 12 conversations: turns 0-5, then replays of turns 0-1 with turns 6-9,
+    // which only the state written before the restart can suppress
+    def turn(c: Int, i: Int, sec: Long) = Turn(f"CRS$c%02d", i, "user",
+      TranscriptGen.userText(if (i % 3 == 2) "regex_fail" else "valid_email", c % 5, 42L), null,
+      ts(sec))
+    val first = for (c <- 0 until 12; i <- 0 until 6) yield turn(c, i, c * 10 + i)
+    val second = for (c <- 0 until 12; i <- Seq(0, 1) ++ (6 until 10)) yield turn(c, i, 200 + c * 10 + i)
+    def write(in: String, rows: Seq[Turn]): Unit =
+      rows.grouped(24).foreach(_.toDS().coalesce(1).write.mode("append").parquet(in))
+    def cfg(in: String, out: String, ck: String) = StreamValidate.Config(in, out, ck,
+      withDedup = true, maxFilesPerTrigger = 1, availableNow = true)
+    def drain(c: StreamValidate.Config): Unit = {
+      val q = StreamValidate.start(spark, c, TranscriptGen.catalog)
+      q.awaitTermination(); q.stop()
+    }
+    // StreamValidate.start's dedup plan, started on whatever store the
+    // session names, as every stream started before FileStream set a store
+    def startOnSessionStore(c: StreamValidate.Config): StreamingQuery = {
+      val sink = new ExactlyOnceSink(c.outDir)
+      val write: (DataFrame, Long) => Unit = sink.writeBatch
+      val raw = spark.readStream.schema(graft.model.Schemas.transcript)
+        .option("maxFilesPerTrigger", c.maxFilesPerTrigger).parquet(c.inputDir)
+      ValidationPipeline.decideFast(spark,
+        DedupState.dedup(spark, raw.as[Turn], c.watermark).drop("out_of_order").toDF(),
+        TranscriptGen.catalog).toDF()
+        .writeStream.option("checkpointLocation", c.checkpointDir).outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch(write).start()
+    }
+    val whole = tmp("in_rs_whole")
+    write(whole, first); write(whole, second)
+    val outA = tmp("out_rs_a")
+    drain(cfg(whole, outA, tmp("ck_rs_a")))
+    val sinkA = new ExactlyOnceSink(outA)
+    // (store, provider, state file the first run writes, the resumed run's)
+    val stores = Seq(
+      ("HDFS", "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+        ".delta", ".delta"),
+      ("RocksDB without changelog",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        ".zip", ".changelog"))
+    for ((name, provider, written, expected) <- stores) {
+      val in = tmp("in_rs"); val out = tmp("out_rs"); val ck = tmp("ck_rs")
+      write(in, first)
+      withConf("spark.sql.streaming.stateStore.providerClass" -> provider,
+          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "false") {
+        val q = startOnSessionStore(cfg(in, out, ck))
+        q.awaitTermination(); q.stop()
+      }
+      def stateFiles() = Files.walk(Paths.get(ck, "state")).iterator().asScala
+        .map(_.getFileName.toString).toSet
+      val before = stateFiles()
+      assert(before.exists(_.endsWith(written)) && !before.exists(_.endsWith(".changelog")),
+        s"$name: the first run wrote ${before.toSeq.sorted.mkString(", ")}")
+      write(in, second)
+      drain(cfg(in, out, ck))
+      // Spark keeps the checkpoint's own provider; RocksDB goes on with changelogs
+      val resumed = stateFiles() -- before
+      assert(resumed.exists(_.endsWith(expected)),
+        s"$name: the resumed run wrote ${resumed.toSeq.sorted.mkString(", ")}")
+      val sink = new ExactlyOnceSink(out)
+      assert(sink.committedBatches().size >= 6, s"$name: ${sink.committedBatches()}")
+      Seq("valid", "rejected", "webdata").foreach { kind =>
+        val a = sinkA.read(spark, kind).drop("batch_id")
+        val b = sink.read(spark, kind).drop("batch_id")
+        assert(a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
+          s"$name: $kind differs from the uninterrupted run")
+      }
+    }
+    assert(sinkA.read(spark, "valid").count() + sinkA.read(spark, "rejected").count() == 12 * 10)
   }
 
   test("stream-stream join runs with bounded state (watermarked)") {
