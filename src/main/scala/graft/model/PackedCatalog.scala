@@ -10,11 +10,12 @@ import scala.collection.mutable
   * Broadcasting the catalog's object graph costs in proportion to its
   * objects, twice: Spark sizes the value with a reflective walk before it
   * stores it, then Java-serializes it. For a 20k-user catalog that was
-  * ~95-155 ms of every `StreamValidate.start` (and of every refresh-mode
-  * micro-batch). A byte array is sized in constant time and serialized as
-  * one copy, so the broadcast drops to ~7 ms; packing takes ~20 ms on the
-  * driver and unpacking ~15 ms, once per JVM that reads the broadcast (the
-  * first task to call [[catalog]]; in local mode the driver's own copy).
+  * ~100-170 ms (4-core box) of every `StreamValidate.start` and of every
+  * refresh-mode micro-batch. A byte array is sized in constant time and
+  * serialized as one copy, so the broadcast drops to ~7 ms; packing takes
+  * ~16-25 ms on the driver and unpacking ~8-15 ms, once per JVM that reads
+  * the broadcast (the first task to call [[catalog]]; in local mode the
+  * driver's own copy).
   *
   * Layout: strings are written once, UTF-8 with a length, and referred to
   * by index after that; so are the `allowed` lists, which most entities

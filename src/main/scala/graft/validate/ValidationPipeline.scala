@@ -23,10 +23,10 @@ import graft.model._
   *
   * The catalog is broadcast as a [[PackedCatalog]], one byte array: Spark
   * sizes and serializes a broadcast value by walking its objects, which for
-  * a 20k-user catalog's maps took ~95-155 ms of every call (every
+  * a 20k-user catalog's maps took ~100-170 ms of every call (every
   * `StreamValidate.start`, and every refresh-mode micro-batch); a byte
-  * array takes ~7 ms, plus ~20 ms to pack and ~15 ms to unpack once per
-  * JVM.
+  * array takes ~7 ms, plus ~16-25 ms to pack and ~8-15 ms to unpack once
+  * per JVM.
   */
 object ValidationPipeline {
 
