@@ -30,13 +30,10 @@ object Bpe {
 
   val EndOfWord = "</w>"
 
-  private def wordsCol(textCol: String) =
-    split(lower(trim(col(textCol))), "\\s+")
-
   /** One distributed pass: deterministic top-`maxWords` word histogram. */
   def wordHistogram(docs: DataFrame, maxWords: Int,
       textCol: String = "text"): Array[(String, Long)] =
-    docs.select(explode(wordsCol(textCol)).as("w"))
+    docs.select(explode(TextMetrics.words(col(textCol))).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("n"))
       .orderBy(desc("n"), asc("w")) // deterministic under ties
@@ -151,7 +148,7 @@ object Bpe {
     import spark.implicits._
     val ranks = merges.zipWithIndex.toMap
     val branks = spark.sparkContext.broadcast(ranks)
-    docs.select(col("doc_id"), wordsCol(textCol).as("ws"))
+    docs.select(col("doc_id"), TextMetrics.words(col(textCol)).as("ws"))
       .as[(Long, Seq[String])]
       .mapPartitions { it =>
         val memo = mutable.HashMap.empty[String, (Int, Int)]

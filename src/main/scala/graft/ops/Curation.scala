@@ -38,10 +38,7 @@ object Curation {
     // measured slower — RDD blocks cannot column-prune) — and release it
     // after the result is materialized, so no CacheManager entry outlives
     // the call.
-    val s1 = Dedup.exact(docs)
-      .filter(col("keep")).select("doc_id")
-      .join(docs, Seq("doc_id"))
-      .cache()
+    val s1 = Dedup.exactSurvivors(docs).cache()
     // 2. near-dup removal over the exact-dedup survivors
     val nearDupIds = Dedup.ngramJaccardPairs(s1, n = 3, threshold = jaccard)
       .select(col("doc_b").as("doc_id")).distinct()
@@ -101,10 +98,7 @@ object Curation {
     // drops its reference. At production scale these are exactly the stage
     // snapshots a multi-gate curation DAG needs.
     // 1. exact dedup — keep the smallest doc_id of each duplicate group
-    val s1 = Dedup.exact(docs)
-      .filter(col("keep")).select("doc_id")
-      .join(docs, Seq("doc_id"))
-      .cache()
+    val s1 = Dedup.exactSurvivors(docs).cache()
     // 2. span gate: drop docs more than spanDupFrac duplicated-span text
     val spanOk = SpanDedup.profile(s1, w = spanW)
       .filter(col("dup_frac") <= spanDupFrac).select("doc_id")
@@ -153,9 +147,7 @@ object Curation {
   def curateMinhash(docs: DataFrame, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.5, maxBucket: Int = 100000, lang: String = "en",
       minTokens: Int = 3): DataFrame = {
-    val s1 = Dedup.exact(docs)
-      .filter(col("keep")).select("doc_id")
-      .join(docs, Seq("doc_id"))
+    val s1 = Dedup.exactSurvivors(docs)
     val nearDupIds = Dedup.minhashLshPairs(docs, numHashes = numHashes,
         bands = bands, threshold = threshold, maxBucket = maxBucket)
       .select(col("doc_b").as("doc_id")).distinct()

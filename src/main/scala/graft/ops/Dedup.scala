@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  private def words(text: Column): Column = split(lower(trim(text)), "\\s+")
+  import TextMetrics.words
 
   /** Word n-gram shingles, distinct — native codegen kernel
     * (graft.functions.WordNgrams): one static loop per row, byte-identical
@@ -52,12 +52,7 @@ object Dedup {
     * every row by digest).
     */
   def exact(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    // Outer trim matters: Spark/DuckDB `trim` strips SPACES only, so text
-    // with a leading tab/newline reaches regexp_replace un-trimmed and the
-    // \s+ collapse leaves a single leading/trailing space — the outer trim
-    // removes it, matching the oracle's md5(trim(regexp_replace(...))).
-    val norm = trim(regexp_replace(lower(trim(col(textCol))), "\\s+", " "))
-    val hashed = docs.select(col("doc_id"), md5(norm).as("text_hash"))
+    val hashed = docs.select(col("doc_id"), md5(normalized(col(textCol))).as("text_hash"))
     val keep = hashed.groupBy("text_hash").agg(min("doc_id").as("keep_id"))
     // null-SAFE join key: null-text docs hash to a null key and form their
     // own duplicate group (matching the oracle's PARTITION BY window, which
@@ -67,6 +62,22 @@ object Dedup {
       .select(col("doc_id"), col("text_hash"), col("keep_id"),
         (col("doc_id") === col("keep_id")).as("keep"))
   }
+
+  /** The text [[exact]] digests: lowercased, whitespace runs collapsed to
+    * one space. The outer trim matters: Spark/DuckDB `trim` strips SPACES
+    * only, so text with a leading tab/newline reaches regexp_replace
+    * un-trimmed and the \s+ collapse leaves a single leading/trailing
+    * space — the outer trim removes it, matching the oracle's
+    * md5(trim(regexp_replace(...))).
+    */
+  private[graft] def normalized(text: Column): Column =
+    trim(regexp_replace(lower(trim(text)), "\\s+", " "))
+
+  /** The docs [[exact]] keeps (the smallest doc_id of each duplicate
+    * group), with all their columns.
+    */
+  private[graft] def exactSurvivors(docs: DataFrame): DataFrame =
+    exact(docs).filter(col("keep")).select("doc_id").join(docs, Seq("doc_id"))
 
   // --------------------------------------------------------- n-gram Jaccard
 
@@ -98,10 +109,8 @@ object Dedup {
     // text never reaches a shuffle).
     val pruned = prunedIndex(docs, n, maxDf, textCol).localCheckpoint()
     val sizes = pruned.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    val pairs = pruned.as("a").join(pruned.as("b"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("shared"))
+    val pairs = Lsh.selfJoin(pruned, "doc_id", "doc_a", "doc_b", "sh")
+      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("shared"))
     pairs
       .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "na"), "doc_a")
       .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "nb"), "doc_b")
@@ -118,10 +127,9 @@ object Dedup {
     */
   private[graft] def prunedIndex(docs: DataFrame, n: Int, maxDf: Int,
       textCol: String): DataFrame = {
+    // a shingle's bucket holds one row per doc, so its count is its df
     val sh = docs.select(col("doc_id"), explode(shingles(col(textCol), n)).as("sh"))
-    val keep = sh.groupBy("sh").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf).select("sh")
-    sh.join(keep, Seq("sh"), "left_semi")
+    Lsh.capped(sh, maxDf, "sh")
   }
 
   // ------------------------------------------------------------ MinHash+LSH
@@ -171,21 +179,10 @@ object Dedup {
     // self-join. The repartition keys the band join and lets both self-join
     // sides reuse ONE exchange.
     val banded = sigs.select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(slice(col("sig"), b * r + 1, lit(r))))).as(Seq("band", "bucket")))
+        Lsh.bandRows(bands)(Lsh.minhashBand(col("sig"), _, r)).as(Seq("band", "bucket")))
       .repartition(col("band"), col("bucket"))
-    // skew guard: a bucket holding >maxBucket docs contributes O(n^2)
-    // pairs and near-zero signal (it's a low-entropy band); cap it via a
-    // hash-agg prune + left_semi (one count row per bucket, map-side
-    // combined) — not a window count, which would sort every banded row.
-    val underCap = banded.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("bn"))
-      .filter(col("bn") <= maxBucket).select("band", "bucket")
-    val guarded = banded.join(underCap, Seq("band", "bucket"), "left_semi")
-    val cand = guarded.as("a").join(guarded.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+    val cand = Lsh.selfJoin(Lsh.capped(banded, maxBucket, "band", "bucket"),
+        "doc_id", "doc_a", "doc_b", "band", "bucket")
       .dropDuplicates("doc_a", "doc_b")
     // sigs is materialized data: the re-attach joins need no barrier
     val sa = sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a"))
@@ -268,19 +265,10 @@ object Dedup {
     // faster shape).
     val sh = simhash(docs, textCol).repartition(col("doc_id"))
     val blocks = sh.select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(3)),
-          b => call_function("shiftright", col("simhash"), b * 16).bitwiseAND(0xFFFFL)))
-          .as(Seq("block", "key")))
+        Lsh.bandRows(4)(Lsh.bitBlock(col("simhash"), _, 16)).as(Seq("block", "key")))
       .repartition(col("block"), col("key"))
-    // hash-agg prune + left_semi, not a window count (see minhashLshPairs)
-    val underCap = blocks.groupBy("block", "key")
-      .agg(count(lit(1)).as("bn"))
-      .filter(col("bn") <= maxBucket).select("block", "key")
-    val guarded = blocks.join(underCap, Seq("block", "key"), "left_semi")
-    val cand = guarded.as("a").join(guarded.as("b"),
-        col("a.block") === col("b.block") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+    val cand = Lsh.selfJoin(Lsh.capped(blocks, maxBucket, "block", "key"),
+        "doc_id", "doc_a", "doc_b", "block", "key")
       .dropDuplicates("doc_a", "doc_b")
     val ha = sh.select(col("doc_id").as("doc_a"), col("simhash").as("sh_a"))
     val hb = sh.select(col("doc_id").as("doc_b"), col("simhash").as("sh_b"))

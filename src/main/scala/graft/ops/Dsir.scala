@@ -25,10 +25,9 @@ import org.apache.spark.sql.functions._
   */
 object Dsir {
 
-  val NumBuckets = 128
+  import TextMetrics.words
 
-  private def words(text: Column): Column =
-    split(lower(trim(text)), "\\s+")
+  val NumBuckets = 128
 
   /** Hashed feature bucket of one word: charFp mod m. */
   def bucket(w: Column): Column =

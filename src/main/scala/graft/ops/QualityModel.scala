@@ -34,7 +34,7 @@ object QualityModel {
         xCols(col(textCol)).zipWithIndex.map { case (x, j) => x.as(s"x$j") }: _*)
 
   private def xCols(t: Column): Seq[Column] = {
-    val ws = split(lower(trim(t)), "\\s+")
+    val ws = TextMetrics.words(t)
     Seq(
       lit(1.0),
       length(t) / 1000.0,

@@ -42,14 +42,6 @@ object Sampling {
     when(substring(md5(id.cast("string")), 1, 2) < lit(valBucketMax), "val")
       .otherwise("train")
 
-  /** Per-split counts — the summary a pipeline logs to prove the split
-    * fraction landed where expected.
-    */
-  def splitStats(docs: DataFrame, valBucketMax: String = "0d",
-      idCol: String = "doc_id"): DataFrame =
-    hashSplit(docs, valBucketMax, idCol)
-      .groupBy("split").agg(count(lit(1)).as("n"))
-
   /** EXACT stratified sample: ceil(frac * |stratum|) rows per stratum,
     * chosen deterministically by md5(id) order (id tiebreak) — the
     * "balanced subset across languages/sources" operator a curation

@@ -346,20 +346,6 @@ object Similarity {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** The full maintenance step a production pipeline runs per delta
-    * batch: append under frozen centroids, probe staleness, retrain +
-    * atomically swap when the corpus has drifted past `tolerance`.
-    * Returns true when a retrain happened.
-    */
-  def maintainIvfIndex(newEmb: DataFrame, dir: String,
-      tolerance: Double = 0.05, nlist: Int = 16,
-      kmeansIters: Int = 0): Boolean = {
-    appendIvfIndex(newEmb, dir)
-    val spark = newEmb.sparkSession
-    if (!ivfNeedsRetrain(spark, dir, tolerance)) false
-    else { rebuildIvfIndex(spark, dir, nlist, kmeansIters); true }
-  }
-
   /** Mean assignment quality of the CURRENT index contents: avg over rows
     * of cos(v, centroid[list_id]) — each row pays one dot against its own
     * stored assignment (no re-argmax), map-side-combined to a single avg.
@@ -429,18 +415,6 @@ object Similarity {
       k)
   }
 
-  /** Random-hyperplane LSH code: bit j = sign of <v, h_j> where hyperplane
-    * h_j's components are deterministic pseudo-random +/-1 derived from
-    * xxhash64(j, dim_index). Near-dup pairs = same `planes`-bit code
-    * bucket, verified by exact cosine >= threshold.
-    *
-    * Same scale pattern as Dedup.minhashLshPairs/simhashPairs: the
-    * candidate self-join carries ONLY ids (vectors re-attached by key
-    * behind a repartition barrier — never dragged through the join where
-    * projection collapse would recompute per pair), and mega-buckets
-    * (e.g. near-zero vectors all coding to 0) are capped at `maxBucket` —
-    * a degenerate bucket is O(n²) pairs of pure noise.
-    */
   /** HOF reference formulation of the hyperplane code — kept for the
     * kernel-parity spec.
     */
@@ -457,6 +431,16 @@ object Similarity {
         acc.bitwiseOR(when(proj > 0, call_function("shiftleft", lit(1L), j)).otherwise(0L))
       })
 
+  /** Random-hyperplane LSH code: bit j = sign of <v, h_j> where hyperplane
+    * h_j's components are deterministic pseudo-random +/-1 derived from
+    * xxhash64(j, dim_index). Near-dup pairs = same `planes`-bit code
+    * bucket, verified by exact cosine >= threshold.
+    *
+    * Same scale pattern as Dedup.minhashLshPairs/simhashPairs ([[Lsh]]):
+    * the candidate self-join carries ONLY ids, and mega-buckets (e.g.
+    * near-zero vectors all coding to 0) are capped at `maxBucket` — a
+    * degenerate bucket is O(n²) pairs of pure noise.
+    */
   def lshCosinePairs(emb: DataFrame, planes: Int = 16,
       threshold: Double = 0.9, maxBucket: Int = 1000): DataFrame = {
     val base = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
@@ -464,17 +448,18 @@ object Similarity {
     val code = graft.functions.SketchExpr.hyperplane_code(col("v"), planes)
     val coded = base.select(col("vec_id"), code.as("code"))
       .repartition(col("code"))
-    // mega-bucket guard as a hash-agg prune + left_semi — the same shape as
-    // Dedup's maxDf prune (map-side-combined aggregate, one count row per
-    // code), NOT a window count, which would sort every (vec_id, code) row
-    // per partition for a guard that only needs per-code counts.
-    // Plan-pinned no-Window in PlanAuditSpec.
-    val underCap = coded.groupBy("code").agg(count(lit(1)).as("bn"))
-      .filter(col("bn") <= maxBucket).select("code")
-    val guarded = coded.join(underCap, Seq("code"), "left_semi")
-    val cand = guarded.as("a").join(guarded.as("b"),
-        col("a.code") === col("b.code") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
+    val cand = Lsh.selfJoin(Lsh.capped(coded, maxBucket, "code"),
+      "vec_id", "vec_a", "vec_b", "code")
+    verifiedCosine(cand, base, threshold)
+  }
+
+  /** Candidate (vec_a, vec_b) pairs with their exact cosine, kept at >=
+    * `threshold`. Vectors are re-attached by key behind a repartition
+    * barrier — never dragged through the candidate join, where projection
+    * collapse would recompute them per pair.
+    */
+  private def verifiedCosine(cand: DataFrame, base: DataFrame,
+      threshold: Double): DataFrame = {
     val va = base.select(col("vec_id").as("vec_a"), col("v").as("va"))
       .repartition(col("vec_a"))
     val vb = base.select(col("vec_id").as("vec_b"), col("v").as("vb"))
@@ -493,12 +478,11 @@ object Similarity {
     * per-cluster join is keyed on list_id — never a cartesian.
     *
     * Scale shape: assignment is the zero-exchange centroid-literal argmax
-    * projection; the candidate join carries ids only (vectors join back
-    * by vec_id afterwards — the ids-only discipline of every candidate
-    * generator in this repo); `maxCluster` guards degenerate clusters the
-    * same hash-agg + left_semi way as the LSH bucket caps (a cluster
-    * bigger than the cap is exactly the case where you re-train with a
-    * bigger nlist instead of letting one join key go quadratic).
+    * projection; the candidate join is [[Lsh]]'s ids-only self-join keyed
+    * on list_id (vectors join back by vec_id afterwards), and `maxCluster`
+    * is its bucket cap (a cluster bigger than the cap is exactly the case
+    * where you re-train with a bigger nlist instead of letting one join
+    * key go quadratic).
     */
   def semanticDedupPairs(emb: DataFrame, nlist: Int = 16, kmeansIters: Int = 2,
       threshold: Double = 0.95, maxCluster: Int = 10000): DataFrame = {
@@ -509,19 +493,9 @@ object Similarity {
         graft.functions.VectorExpr.argmax_dot(col("v"), typedlit(cents)))
       .select(col("vec_id"), col("list_id"))
       .repartition(col("list_id"))
-    val underCap = ids.groupBy("list_id").agg(count(lit(1)).as("cn"))
-      .filter(col("cn") <= maxCluster).select("list_id")
-    val guarded = ids.join(underCap, Seq("list_id"), "left_semi")
-    val cand = guarded.as("a").join(guarded.as("b"),
-        col("a.list_id") === col("b.list_id") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-    val va = base.select(col("vec_id").as("vec_a"), col("v").as("va"))
-      .repartition(col("vec_a"))
-    val vb = base.select(col("vec_id").as("vec_b"), col("v").as("vb"))
-      .repartition(col("vec_b"))
-    cand.join(va, "vec_a").join(vb, "vec_b")
-      .select(col("vec_a"), col("vec_b"), cosine(col("va"), col("vb")).as("cos"))
-      .filter(col("cos") >= threshold)
+    val cand = Lsh.selfJoin(Lsh.capped(ids, maxCluster, "list_id"),
+      "vec_id", "vec_a", "vec_b", "list_id")
+    verifiedCosine(cand, base, threshold)
   }
 
   /** Per-vector keep/drop verdict from [[semanticDedupPairs]]: a vector

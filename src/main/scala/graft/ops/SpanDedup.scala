@@ -28,8 +28,7 @@ import org.apache.spark.sql.functions._
   */
 object SpanDedup {
 
-  private def words(text: Column): Column =
-    split(lower(trim(text)), "\\s+")
+  import TextMetrics.words
 
   /** Array of window hashes for one document's word array — native
     * codegen kernel (graft.functions.SpanWindowHashes): per-word charFp

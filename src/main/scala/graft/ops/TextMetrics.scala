@@ -26,7 +26,10 @@ object TextMetrics {
     "es" -> Seq("el", "los", "y", "es", "un", "una", "en", "que", "por", "con"),
     "fr" -> Seq("le", "la", "les", "et", "est", "dans", "pour", "vous", "ce", "une"))
 
-  private def words(text: Column): Column =
+  /** The word tokenizer every text operator shares: lowercase, trim,
+    * split on whitespace runs (the oracle's `string_split_regex`).
+    */
+  private[graft] def words(text: Column): Column =
     split(lower(trim(text)), "\\s+")
 
   /** Per-document quality metrics + a composite score in [0,1]. */

@@ -80,14 +80,12 @@ object StreamCuration {
     import spark.implicits._
     require(cfg.numHashes % cfg.bands == 0, "bands must divide numHashes")
     val r = cfg.numHashes / cfg.bands
-    // same normalization as Dedup.exact — the exact-digest lane must
-    // reproduce the batch duplicate groups bit-for-bit
-    val norm = trim(regexp_replace(lower(trim(col("text"))), "\\s+", " "))
     val sh = graft.ops.Dedup.shingles(col("text"), cfg.n)
     val prepared = docs.select(
       col("doc_id"),
       col("ts"),
-      md5(norm).as("digest"),
+      // Dedup.exact's digest: the exact lane reproduces the batch groups
+      md5(graft.ops.Dedup.normalized(col("text"))).as("digest"),
       when(size(sh) > 0,
         graft.functions.SketchExpr.minhash_sig(sh, cfg.numHashes)).as("sig"),
       graft.ops.TextMetrics.langPred(col("text")).as("lang_pred"),
@@ -98,7 +96,7 @@ object StreamCuration {
     val exactLane = struct(lit(-1).as("band"), col("digest").as("bucket"))
     val bandLanes = (0 until cfg.bands).map { b =>
       struct(lit(b).as("band"),
-        xxhash64(slice(col("sig"), lit(b * r + 1), lit(r))).cast("string").as("bucket"))
+        graft.ops.Lsh.minhashBand(col("sig"), lit(b), r).cast("string").as("bucket"))
     }
     val lanes = prepared.select(
         explode(when(col("sig").isNotNull, array(exactLane +: bandLanes: _*))

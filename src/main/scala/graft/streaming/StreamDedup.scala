@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.Lsh
 
 /** One banded signature row flowing into a bucket's state. */
 final case class BandedDoc(band: Int, bucket: Long, doc_id: Long, sig: Seq[Long],
@@ -21,13 +22,14 @@ final case class NearDupPair(doc_a: Long, doc_b: Long, est_jaccard: Double,
   * the batch operator can only pair by reprocessing the whole corpus.
   *
   * Shape: signature + banding are NARROW codegen stages (the same native
-  * `minhash_sig` expression as batch); the only exchange is the one Spark
-  * inserts for the (band, bucket)-keyed state — exactly the batch plan's
-  * band-bucket shuffle, amortized over arrival. State per bucket is
-  * <= maxBucket signatures and buckets close `gap` after their newest
-  * event ([[EventTimeState]]), so state is bounded by ACTIVE buckets, not
-  * stream length ([[LshBucket]]). A pair is emitted AT LEAST ONCE, from up
-  * to `bands` buckets; consumers collapse it with a set or `groupBy`.
+  * `minhash_sig` expression and [[Lsh]] band keys as batch); the only
+  * exchange is the one Spark inserts for the (band, bucket)-keyed state —
+  * exactly the batch plan's band-bucket shuffle, amortized over arrival.
+  * State per bucket is <= maxBucket signatures and buckets close `gap`
+  * after their newest event ([[EventTimeState]]), so state is bounded by
+  * ACTIVE buckets, not stream length ([[LshBucket]]). A pair is emitted
+  * AT LEAST ONCE, from up to `bands` buckets; consumers collapse it with
+  * a set or `groupBy`.
   *
   * Cap semantics vs batch: the batch operator drops an over-`maxBucket`
   * bucket RETROACTIVELY (it sees the full corpus); a stream cannot, so a
@@ -50,8 +52,7 @@ object StreamDedup {
         graft.ops.Dedup.shingles(col(textCol), n), numHashes))
       .select(col("doc_id"), col("sig"), col("ts"))
     val banded = sigs.select(
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(slice(col("sig"), b * r + 1, lit(r))))).as(Seq("band", "bucket")),
+        Lsh.bandRows(bands)(Lsh.minhashBand(col("sig"), _, r)).as(Seq("band", "bucket")),
         col("doc_id"), col("sig"), col("ts"))
       .withWatermark("ts", watermark)
       .as[BandedDoc]
@@ -94,15 +95,12 @@ object StreamDedup {
     require(planes % bands == 0, "bands must divide planes")
     require(planes <= 63, "hyperplane codes are a single long")
     val width = planes / bands
-    val mask = (1L << width) - 1
 
     val coded = emb
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"), col("ts"))
       .withColumn("code", graft.functions.SketchExpr.hyperplane_code(col("v"), planes))
     val banded = coded.select(
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => call_function("shiftright", col("code"), b * width).bitwiseAND(mask)))
-          .as(Seq("band", "bucket")),
+        Lsh.bandRows(bands)(Lsh.bitBlock(col("code"), _, width)).as(Seq("band", "bucket")),
         col("vec_id"), col("v"), col("ts"))
       .withWatermark("ts", watermark)
       .as[BandedVec]

@@ -20,10 +20,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * NPE on `userToken.getUuid()` at TP:280 and crash the stream thread — our
   * engine instead rejects with reason=MALFORMED, uuid=null).
   */
-final case class TokenClaims(token: String, uuid: String, email: String, userCode: String) {
-  /** TP:224 `getEmailUserCode` analogue, used only in a log line. */
-  def emailUserCode: String = s"$email:$userCode"
-}
+final case class TokenClaims(token: String, uuid: String, email: String, userCode: String)
 
 object TokenCodec {
   // Jackson ships with Spark (/opt/spark/jars); safe on executor classpath.

@@ -289,6 +289,32 @@ class OpsSpec extends SparkSpec {
       s"identical pair $id missing"))
   }
 
+  test("LSH bucket cap: a bucket of exactly maxBucket rows pairs once, one more drops it") {
+    import spark.implicits._
+    // k copies of one doc and of one vector share EVERY band/block/code
+    // bucket, so each bucket holds exactly k rows
+    val k = 5
+    val ids = spark.range(k).toDF("id")
+    val copies = docs.filter($"doc_id" === 0).select("text")
+      .crossJoin(ids.withColumnRenamed("id", "doc_id"))
+    val vecs = emb.filter($"vec_id" === 0).select("embedding")
+      .crossJoin(ids.withColumnRenamed("id", "vec_id"))
+    val all = for (a <- 0L until k; b <- a + 1 until k) yield (a, b)
+    val generators: Seq[(String, Int => DataFrame)] = Seq(
+      "minhashLshPairs" -> (m => Dedup.minhashLshPairs(copies, maxBucket = m)
+        .select("doc_a", "doc_b")),
+      "simhashPairs" -> (m => Dedup.simhashPairs(copies, maxBucket = m)
+        .select("doc_a", "doc_b")),
+      "lshCosinePairs" -> (m => Similarity.lshCosinePairs(vecs, maxBucket = m)
+        .select("vec_a", "vec_b")))
+    for ((name, pairs) <- generators) {
+      // at the cap: every C(k,2) pair exactly once, though it shares every bucket
+      assert(pairs(k).as[(Long, Long)].collect().sorted.toSeq == all, name)
+      // one over the cap: every bucket is dropped whole
+      assert(pairs(k - 1).isEmpty, name)
+    }
+  }
+
   // -------------------------------------------------------------- multimodal
 
   test("BMP decode: header parsed, 4-byte row padding stripped, pixels recovered") {
