@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.ByteBuffer
 import java.sql.Timestamp
 import scala.collection.mutable
 import org.apache.spark.sql.{Dataset, SparkSession}
@@ -16,41 +15,10 @@ final case class DedupedTurn(
     ts: Timestamp,
     out_of_order: Boolean) // arrived with a lower turn_idx than already seen
 
-/** Per-conversation state kept while the conversation is open. `seen`
-  * holds the turn indices already emitted as [[SeenTurns]] bytes: Spark
-  * decodes a binary field as it is, while a `Set[Int]` (and, in Spark 4.1,
-  * an `Array[Int]` too) decodes through a `MapObjects` loop whose lambda
-  * variable is numbered anew in every plan, so each micro-batch compiled
-  * one more state decoder while the batch's other tasks waited for it.
+/** Per-conversation state kept while the conversation is open: the turn
+  * indices already emitted, the highest of them and the replays dropped.
   */
-final case class ConvState(seen: Array[Byte], maxTurn: Int, dups: Long)
-
-/** The stored form of a [[ConvState]]'s seen turns: distinct turn indices
-  * in ascending order, 4 big-endian bytes each. The fold decodes it once
-  * per key and micro-batch into a hash set and encodes it once when it
-  * returns the state, so each row costs one hash lookup however many turns
-  * the conversation already has.
-  */
-private[graft] object SeenTurns {
-
-  val empty: Array[Byte] = Array.emptyByteArray
-
-  def decode(seen: Array[Byte]): mutable.HashSet[Int] = {
-    val ints = ByteBuffer.wrap(seen).asIntBuffer()
-    val set = mutable.HashSet.empty[Int]
-    set.sizeHint(ints.remaining)
-    while (ints.hasRemaining) set += ints.get()
-    set
-  }
-
-  def encode(set: collection.Set[Int]): Array[Byte] = {
-    val sorted = set.toArray
-    java.util.Arrays.sort(sorted)
-    val bytes = ByteBuffer.allocate(sorted.length * 4)
-    bytes.asIntBuffer().put(sorted)
-    bytes.array()
-  }
-}
+final case class ConvState(seen: mutable.HashSet[Int], maxTurn: Int, dups: Long)
 
 /** conv_id-keyed stateful dedup + ordering (north rule: "per-conversation
   * answer-dedup and ordering state" via [[EventTimeState]]).
@@ -76,8 +44,8 @@ object DedupState {
     EventTimeState.closing(
         turns.withWatermark("ts", watermark).groupByKey(_.conv_id), gap,
         (t: Turn) => t.ts) { (_, rows, prev: Option[ConvState]) =>
-      val s0 = prev.getOrElse(ConvState(SeenTurns.empty, -1, 0L))
-      val seen = SeenTurns.decode(s0.seen)
+      val s0 = prev.getOrElse(ConvState(mutable.HashSet.empty, -1, 0L))
+      val seen = s0.seen
       var maxTurn = s0.maxTurn
       var dups = s0.dups
       val out = rows.flatMap { t =>
@@ -90,7 +58,7 @@ object DedupState {
           Some(DedupedTurn(t.conv_id, t.turn_idx, t.role, t.text, t.tool, t.ts, ooo))
         }
       }.toVector // drain before returning the state
-      (ConvState(SeenTurns.encode(seen), maxTurn, dups), out)
+      (ConvState(seen, maxTurn, dups), out)
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
+import scala.reflect.ClassTag
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, KeyValueGroupedDataset}
 import org.apache.spark.sql.catalyst.util.IntervalUtils
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -25,8 +26,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *    the key's state would never close;
   *  - never earlier than the previous deadline: an older or all-null-ts
   *    batch must not close a key before its newest event time + gap.
+  *
+  * Storage: every operator's state is plain Scala data, stored as one
+  * Kryo-encoded binary field next to the deadline ([[stateEncoder]]).
+  * Spark decodes a binary field as it is, while a state holding a
+  * collection would decode through a `MapObjects` loop whose lambda
+  * variable is numbered anew in every plan, compiling one more state
+  * decoder per micro-batch. A key's encoded state must stay below
+  * `spark.kryoserializer.buffer.max` (64 MB by default).
   */
-private[streaming] object EventTimeState {
+private[graft] object EventTimeState {
+
+  /** The stored form of a key's `(state, deadline)`. */
+  def stateEncoder[S: ClassTag]: Encoder[(S, Long)] =
+    Encoders.tuple(Encoders.kryo[S], Encoders.scalaLong)
 
   /** Milliseconds of a day/time interval such as "30 minutes".
     * Month-bearing intervals have no fixed length and would silently
@@ -47,7 +60,7 @@ private[streaming] object EventTimeState {
     * `gap` is parsed before the plan is built, so a bad gap fails at the
     * call.
     */
-  def closing[K, V, S: Encoder, U: Encoder](grouped: KeyValueGroupedDataset[K, V],
+  def closing[K, V, S: ClassTag, U: Encoder](grouped: KeyValueGroupedDataset[K, V],
       gap: String, ts: V => Timestamp)(
       fold: (K, Iterator[V], Option[S]) => (S, Seq[U]),
       close: Option[(K, S) => Iterator[U]] = None): Dataset[U] = {
@@ -78,6 +91,6 @@ private[streaming] object EventTimeState {
           state.setTimeoutTimestamp(deadline)
           out.iterator
         }
-    }(Encoders.tuple(implicitly[Encoder[S]], Encoders.scalaLong), implicitly[Encoder[U]])
+    }(stateEncoder[S], implicitly[Encoder[U]])
   }
 }

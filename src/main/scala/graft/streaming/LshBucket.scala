@@ -1,14 +1,11 @@
 package graft.streaming
 
-import java.nio.ByteBuffer
 import scala.collection.mutable
 
-/** One LSH bucket's state: member ids and their payload words (one width,
-  * concatenated) as big-endian 8-byte longs. Binary fields decode as they
-  * are; member structs decoded through a `MapObjects` loop numbered anew in
-  * every plan, so each micro-batch compiled one more state decoder.
+/** One LSH bucket's state: its members' `(id, payload words)` in arrival
+  * order, and whether it saturated.
   */
-final case class LshBucketState(ids: Array[Byte], words: Array[Byte], saturated: Boolean)
+final case class LshBucketState(members: Vector[(Long, Array[Long])], saturated: Boolean)
 
 /** The one online LSH bucket fold of [[StreamDedup]]'s text and vector
   * pairs and [[StreamCuration]]'s MinHash lanes. The caller supplies a
@@ -23,9 +20,7 @@ final case class LshBucketState(ids: Array[Byte], words: Array[Byte], saturated:
 private[streaming] object LshBucket {
 
   /** A bucket whose one member is `id`, with no payload. */
-  def single(id: Long): LshBucketState = LshBucketState(bytes(Array(id)), Array.emptyByteArray, false)
-
-  def ids(s: LshBucketState): Array[Long] = longs(s.ids)
+  def single(id: Long): LshBucketState = LshBucketState(Vector(id -> Array.emptyLongArray), false)
 
   /** The fraction of equal words: the Jaccard estimate of two MinHash signatures. */
   def agreement(a: Array[Long], b: Array[Long]): Double = {
@@ -44,12 +39,8 @@ private[streaming] object LshBucket {
       threshold: Double)(id: R => Long, words: R => Array[Long],
       score: (Array[Long], Array[Long]) => Double)(
       emit: (R, Iterator[(Long, Double)]) => IterableOnce[U]): (LshBucketState, Seq[U]) = {
-    val s = prev.getOrElse(LshBucketState(Array.emptyByteArray, Array.emptyByteArray, false))
-    val ids = longs(s.ids)
-    val flat = longs(s.words)
-    val width = if (ids.isEmpty) 0 else flat.length / ids.length
-    val members = mutable.LinkedHashMap.from(ids.indices.map(i =>
-      ids(i) -> java.util.Arrays.copyOfRange(flat, i * width, (i + 1) * width)))
+    val s = prev.getOrElse(LshBucketState(Vector.empty, false))
+    val members = mutable.LinkedHashMap.from(s.members)
     var saturated = s.saturated
     val out = Vector.newBuilder[U]
     rows.foreach { r =>
@@ -68,19 +59,6 @@ private[streaming] object LshBucket {
         }
       }
     }
-    (LshBucketState(bytes(members.keys.toArray), bytes(Array.concat(members.values.toSeq: _*)),
-      saturated), out.result())
-  }
-
-  private def longs(b: Array[Byte]): Array[Long] = {
-    val a = new Array[Long](b.length / 8)
-    ByteBuffer.wrap(b).asLongBuffer().get(a)
-    a
-  }
-
-  private def bytes(a: Array[Long]): Array[Byte] = {
-    val b = ByteBuffer.allocate(a.length * 8)
-    b.asLongBuffer().put(a)
-    b.array()
+    (LshBucketState(members.toVector, saturated), out.result())
   }
 }

@@ -1,39 +1,14 @@
 package graft.streaming
 
-import java.nio.ByteBuffer
 import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.ops.{Cep, CepMatch}
 
-/** Buffered turns of one open conversation (unordered arrival) as
-  * [[CepRows]] bytes. A binary field decodes as it is; a collection of
-  * tuples decodes through a `MapObjects` loop numbered anew in every plan,
-  * so each micro-batch would compile one more state decoder.
+/** Buffered `(turn_idx, ts_sec, symbol)` rows of one open conversation,
+  * in arrival order.
   */
-final case class CepConvState(rows: Array[Byte])
-
-/** The stored form of a [[CepConvState]]: one 14-byte record per turn in
-  * arrival order, `turn_idx` (4 bytes), `ts_sec` (8) and the one-char
-  * symbol (2), big-endian. A micro-batch appends its rows to the stored
-  * bytes without decoding them; the buffer is decoded once, at close.
-  */
-private[streaming] object CepRows {
-
-  private val Width = 14
-
-  def append(prev: Array[Byte], rows: Iterator[(Int, Long, String)]): Array[Byte] = {
-    val added = rows.toArray
-    val buf = ByteBuffer.allocate(prev.length + added.length * Width).put(prev)
-    added.foreach { case (i, t, s) => buf.putInt(i).putLong(t).putChar(s.charAt(0)) }
-    buf.array()
-  }
-
-  def decode(rows: Array[Byte]): IndexedSeq[(Int, Long, String)] = {
-    val buf = ByteBuffer.wrap(rows)
-    IndexedSeq.fill(rows.length / Width)((buf.getInt(), buf.getLong(), buf.getChar().toString))
-  }
-}
+final case class CepConvState(rows: Vector[(Int, Long, String)])
 
 /** Streaming CEP: the event-time twin of [[graft.ops.Cep]]. Turns are
   * symbolized with the SAME codegen'd rule column, buffered per
@@ -46,8 +21,8 @@ private[streaming] object CepRows {
   * because matches are only decided once the watermark proves the
   * conversation complete. That is Flink CEP's event-time contract.
   *
-  * State law: one buffered 14-byte symbol row (int, long, char) per turn
-  * of each OPEN conversation — bounded by open conversations × turns per
+  * State law: one buffered symbol row (int, long, one-char string) per
+  * turn of each OPEN conversation — bounded by open conversations × turns per
   * conversation, independent of stream length. The only exchange is the
   * keyed-state shuffle on conv_id, identical to the batch plan's single
   * exchange amortized over arrival.
@@ -69,11 +44,11 @@ object StreamCep {
       .groupByKey(_._1)
     EventTimeState.closing(grouped, gap, (r: (String, Int, Timestamp, Long, String)) => r._3)(
       (_, rows, prev: Option[CepConvState]) =>
-        (CepConvState(CepRows.append(prev.fold(Array.emptyByteArray)(_.rows),
-          rows.map(r => (r._2, r._4, r._5)))), Seq.empty[CepMatch]),
+        (CepConvState(prev.fold(Vector.empty[(Int, Long, String)])(_.rows) ++
+          rows.map(r => (r._2, r._4, r._5))), Seq.empty[CepMatch]),
       // closed by the watermark: match the sorted buffer once
       Some((conv: String, s: CepConvState) => Cep.matchConv(conv,
-        CepRows.decode(s.rows).sortBy(_._1), java.util.regex.Pattern.compile(pattern)).iterator))
+        s.rows.sortBy(_._1), java.util.regex.Pattern.compile(pattern)).iterator))
   }
 
   /** The transcript instantiation, streaming twin of [[Cep.searchRuns]]. */

@@ -120,7 +120,7 @@ object StreamCuration {
         LshBucket.fold(prev, sorted.iterator, cfg.maxBucket, cfg.threshold)(_.doc_id,
           _.sig.toArray, LshBucket.agreement)((d, m) => Some(verdict(d, m.hasNext)))
       else { // the exact lane never saturates; its first doc is its one member
-        val seen = prev.flatMap(LshBucket.ids(_).headOption)
+        val seen = prev.flatMap(_.members.headOption.map(_._1))
         val first = seen.getOrElse(sorted.head.doc_id) // a fold call has >= 1 row
         val dups = sorted.filter(_.doc_id != first).map(verdict(_, dropped = true))
         (LshBucket.single(first), if (seen.isEmpty) verdict(sorted.head, false) +: dups else dups)

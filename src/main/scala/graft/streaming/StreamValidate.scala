@@ -23,9 +23,9 @@ import graft.validate.ValidationPipeline
   * for the conv_id-keyed dedup state, which is hash-partitioned over
   * `spark.sql.shuffle.partitions`; a hot conversation lands on one
   * partition but its cost is a hash lookup per row (the seen set is
-  * decoded and encoded once per batch, [[SeenTurns]]), so skew shows up only
-  * if one conversation dominates the whole stream volume — tracked by the
-  * sink's per-partition `metrics` view.
+  * decoded and encoded once per batch, [[EventTimeState]]), so skew shows
+  * up only if one conversation dominates the whole stream volume — tracked
+  * by the sink's per-partition `metrics` view.
   */
 object StreamValidate {
 

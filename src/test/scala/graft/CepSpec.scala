@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -89,24 +90,32 @@ class CepSpec extends SparkSpec {
     // agreement run allows 2 hours of lateness
     val out = StreamCep.searchRuns(mem.toDS().toDF(),
       watermark = "2 hours", gap = "30 seconds")
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("cep_out").start()
+    val outDir = Files.createTempDirectory("graft_cep_out").toString
+    val ck = Files.createTempDirectory("graft_cep_ck").toString
+    // the file sink, unlike the memory sink, resumes from its checkpoint
+    def run() = out.writeStream.outputMode("append").format("parquet")
+      .option("path", outDir).option("checkpointLocation", ck).start()
+    // two micro-batches split mid-corpus with a RESTART between them (the
+    // first chunk's buffers come back from the checkpoint), then a
+    // far-future turn to advance the watermark past every close time
+    val q1 = run()
     try {
-      // two micro-batches split mid-corpus, then a far-future turn to
-      // advance the watermark past every close time
       mem.addData(c1: _*)
-      q.processAllAvailable()
+      q1.processAllAvailable()
+    } finally q1.stop()
+    val q2 = run()
+    try {
       mem.addData(c2: _*)
-      q.processAllAvailable()
+      q2.processAllAvailable()
       mem.addData(Turn("ZZZ_FLUSH", 0, "user", "x", null, ts(10_000_000L)))
-      q.processAllAvailable()
-      val got = spark.table("cep_out").as[CepMatch].collect()
+      q2.processAllAvailable()
+      val got = spark.read.schema(out.schema).parquet(outDir).as[CepMatch].collect()
         .filterNot(_.conv_id == "ZZZ_FLUSH").toSet
       val batch = Cep.searchRuns(spark.createDataset(corpus).toDF()).collect().toSet
       assert(got == batch,
         s"stream-only: ${got -- batch}; batch-only: ${batch -- got}")
       assert(got.nonEmpty)
-    } finally q.stop()
+    } finally q2.stop()
   }
 
   test("streaming emits nothing before the conversation closes") {

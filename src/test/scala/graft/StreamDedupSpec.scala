@@ -9,7 +9,8 @@ import graft.fixtures.TranscriptGen
 import graft.streaming.StreamDedup
 
 /** Online MinHash-LSH near-dup detection: cross-micro-batch pair
-  * discovery, batch-operator parity below the cap, saturation bound.
+  * discovery (also across a checkpoint restart), batch-operator parity
+  * below the cap, saturation bound.
   */
 class StreamDedupSpec extends SparkSpec {
 
@@ -37,6 +38,8 @@ class StreamDedupSpec extends SparkSpec {
   test("near-dup pairs are discovered across micro-batches and match the batch operator") {
     import spark.implicits._
     val in = Files.createTempDirectory("graft_sd_in").toString
+    val out = Files.createTempDirectory("graft_sd_out").toString
+    val ck = Files.createTempDirectory("graft_sd_ck").toString
     baseDocs.coalesce(1).write.mode("append").parquet(in)
 
     val stream = spark.readStream
@@ -45,16 +48,21 @@ class StreamDedupSpec extends SparkSpec {
       .parquet(in)
     val pairs = StreamDedup.nearDupPairs(spark, stream,
       numHashes = 64, bands = 16, threshold = 0.3, maxBucket = 10000)
-    val q = pairs.writeStream.format("memory").queryName("sd_pairs")
-      .outputMode("append").start()
+    // the file sink, unlike the memory sink, resumes from its checkpoint
+    def run() = pairs.writeStream.format("parquet").option("path", out)
+      .option("checkpointLocation", ck).outputMode("append").start()
+    def emitted() = spark.read.schema(pairs.schema).parquet(out)
+      .select("doc_a", "doc_b", "est_jaccard").as[(Long, Long, Double)].collect()
+    val q1 = run()
+    try q1.processAllAvailable() finally q1.stop()
+    val afterChunk1 = emitted().length
+    // second chunk arrives after a RESTART: the bases' buckets come back
+    // from the checkpoint
+    copyDocs.coalesce(1).write.mode("append").parquet(in)
+    val q2 = run()
     try {
-      q.processAllAvailable()
-      val afterChunk1 = spark.sql("select count(*) from sd_pairs").head().getLong(0)
-      // second chunk arrives in a LATER micro-batch
-      copyDocs.coalesce(1).write.mode("append").parquet(in)
-      q.processAllAvailable()
-      val raw = spark.sql("select doc_a, doc_b, est_jaccard from sd_pairs")
-        .as[(Long, Long, Double)].collect()
+      q2.processAllAvailable()
+      val raw = emitted()
       val got = raw.toSet
       // at-least-once: a pair may surface from several bands, never more
       assert(raw.groupBy(r => (r._1, r._2)).values.map(_.length).max <= 16)
@@ -72,7 +80,7 @@ class StreamDedupSpec extends SparkSpec {
         .as[(Long, Long, Double)].collect().toSet
       assert(got == batch,
         s"stream-only: ${got -- batch}; batch-only: ${batch -- got}")
-    } finally q.stop()
+    } finally q2.stop()
   }
 
   test("all-null-event-time groups still get a closure deadline (no eternal state)") {
