@@ -25,20 +25,23 @@ final class ExactlyOnceSink(outDir: String) extends Serializable {
   /** Write one decision micro-batch. Safe to call twice with the same id.
     *
     * The write is the ONLY execution of the micro-batch plan — one Spark
-    * job. A foreachBatch DataFrame re-executes its whole plan per action,
-    * including any upstream STATEFUL operator, so a second action would
-    * recompute the dedup state op and double-count its watermark-drop
-    * metrics. `partition_id` records the writing partition for the
-    * per-partition metrics view. Dictionary encoding is off: high-entropy
-    * message text only burns CPU before the encoder falls back.
+    * job, [[ManifestSink.write]]: each task writes its partition's rows to
+    * one parquet file, and the `_commits/<id>` marker is the only commit
+    * (no `_SUCCESS`, no write-job SQL metrics, no
+    * `spark.sql.files.maxRecordsPerFile` split). A foreachBatch DataFrame
+    * re-executes its whole plan per action, including any upstream
+    * STATEFUL operator, so a second action would recompute the dedup state
+    * op and double-count its watermark-drop metrics. The plan's observed
+    * metrics (`graft_out`) still reach the query's progress: the job runs
+    * the micro-batch's own RDD. `partition_id` records the writing
+    * partition for the per-partition metrics view. Dictionary encoding is
+    * off: high-entropy message text only burns CPU before the encoder
+    * falls back.
     */
   def writeBatch(decisions: DataFrame, batchId: Long): Unit =
-    table.publish(batchId) { dir =>
-      decisions.withColumn("partition_id", spark_partition_id())
-        .write.mode("overwrite")
-        .option("parquet.enable.dictionary", "false")
-        .parquet(dir)
-    }
+    table.publish(batchId)(ManifestSink.write(
+      decisions.withColumn("partition_id", spark_partition_id()), _,
+      Map("parquet.enable.dictionary" -> "false")))
 
   /** Committed-only view of one output kind, each with `batch_id`:
     *  - `decisions`: the written table (decision columns + `partition_id`);

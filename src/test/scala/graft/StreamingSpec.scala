@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -98,6 +99,22 @@ class StreamingSpec extends SparkSpec {
       assert(sink.read(spark, "webdata").count() == 1)
       val metricsTxt = new String(Files.readAllBytes(java.nio.file.Paths.get(metricsPath)))
       assert(metricsTxt.contains("\"dropped_late\":1"), metricsTxt)
+      // every batch that ran reports its graft_out lineage counters, equal
+      // to the decisions it committed (the sink's job runs the batch's plan)
+      val decisions = sink.read(spark, "decisions")
+      val ran = q.recentProgress.filter(_.durationMs.containsKey("addBatch"))
+      assert(ran.map(_.batchId).toSet == sink.committedBatches())
+      assert(ran.exists(_.numInputRows == 0), "expected a no-data batch")
+      for (p <- ran) {
+        val m = p.observedMetrics.get("graft_out")
+        assert(m != null, s"batch ${p.batchId}: no graft_out in ${p.observedMetrics}")
+        // a sum over no rows is null
+        def n(f: String): Long = if (m.isNullAt(m.fieldIndex(f))) 0L else m.getAs[Long](f)
+        val b = decisions.filter($"batch_id" === p.batchId)
+        assert(Seq(n("rows_out"), n("valid"), n("rejected")) == Seq(b.count(),
+          b.filter($"decision" === "valid").count(),
+          b.filter($"decision" === "rejected").count()), s"batch ${p.batchId}: $m")
+      }
     } finally spark.streams.removeListener(listener)
   }
 
@@ -206,6 +223,18 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("sink reads skip a write attempt file and its .crc left in a committed batch dir") {
+    readsIgnore("out_attempt") { out =>
+      // an attempt that wrote its whole file but lost the rename to a
+      // second attempt: a copy of the committed part file, still hidden
+      val dir = Paths.get(s"$out/data/batch_id=1")
+      val part = Files.list(dir).iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("part-")).toSeq.min
+      Files.copy(dir.resolve(part), dir.resolve(s".$part.7"))
+      Files.copy(dir.resolve(s".$part.crc"), dir.resolve(s"..$part.7.crc"))
+    }
+  }
+
   test("sink reads ignore a temp marker left by a crash mid-publish") {
     // the crash fell between the temp-marker write and its ATOMIC_MOVE
     val sink = readsIgnore("out_tmpmark")(out =>
@@ -270,6 +299,74 @@ class StreamingSpec extends SparkSpec {
       .withColumn("batch_id", lit(5L))
     assert(metrics.count() == 3)
     same(sink.read(spark, "metrics"), metrics, "metrics")
+  }
+
+  test("sink write: the conf a write task rebuilds equals the job conf key for key") {
+    graft.io.LocalFs.use(spark) // as FileStream.start sets it for every stream
+    val schema = ValidationPipeline.decide(spark,
+      TranscriptGen.turnsDs(spark, 1, 2, 0).toDF(), TranscriptGen.catalog).schema
+    val (job, _) = ManifestSink.prepare(spark, schema, Map("parquet.enable.dictionary" -> "false"))
+    val task = ManifestSink.rebuildConf(ManifestSink.confPairs(job))
+    def keys(c: org.apache.hadoop.conf.Configuration) = c.iterator.asScala.map(_.getKey).toSet
+    assert(keys(job).size > 1000, keys(job).size)
+    // a rebuilt key may bring its deprecated alias along; both read the same
+    assert(keys(job).subsetOf(keys(task)))
+    for (k <- keys(task)) assert(task.get(k) == job.get(k), k)
+    val want = Map(
+      "fs.file.impl" -> classOf[graft.io.LocalFs.Fs].getName,
+      "fs.file.impl.disable.cache" -> "true",
+      "fs.AbstractFileSystem.file.impl" -> classOf[graft.io.LocalFs.Afs].getName,
+      "parquet.enable.dictionary" -> "false",
+      "parquet.write.support.class" ->
+        classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport].getName,
+      "org.apache.spark.sql.parquet.row.attributes" -> schema.json,
+      "spark.sql.parquet.outputTimestampType" -> "INT96")
+    assert(want.map { case (k, _) => k -> task.get(k) } == want)
+  }
+
+  test("sink write: a 0-row and a 0-partition batch commit readable, with the schema and no rows") {
+    val schema = ValidationPipeline.decide(spark,
+      TranscriptGen.turnsDs(spark, 1, 2, 0).toDF(), TranscriptGen.catalog).schema
+    val sc = spark.sparkContext
+    for ((parts, rdd) <- Seq(3 -> sc.parallelize(Seq.empty[org.apache.spark.sql.Row], 3),
+        0 -> sc.emptyRDD[org.apache.spark.sql.Row])) {
+      val frame = spark.createDataFrame(rdd, schema)
+      assert(frame.queryExecution.toRdd.getNumPartitions == parts)
+      val out = tmp(s"out_empty$parts")
+      val sink = new ManifestSink(out)
+      sink.writeBatch(frame, 0L)
+      assert(spark.read.parquet(s"$out/data/batch_id=0").isEmpty, parts)
+      val got = sink.read(spark)
+      assert(got.schema.map(f => f.name -> f.dataType) ==
+        schema.add("batch_id", "long").map(f => f.name -> f.dataType), parts)
+      assert(got.isEmpty, parts)
+    }
+  }
+
+  test("sink write: a committed batch reads back as df.write.parquet writes the same frame") {
+    val frame = ValidationPipeline.decide(spark,
+      TranscriptGen.turnsDs(spark, 20, 10, 0).toDF(), TranscriptGen.catalog).toDF()
+      .repartition(3).localCheckpoint()
+    val out = tmp("out_same")
+    val ref = s"${tmp("ref_same")}/t"
+    new ManifestSink(out).writeBatch(frame, 0L)
+    frame.write.parquet(ref)
+    val got = new ManifestSink(out).read(spark).drop("batch_id")
+    val want = spark.read.parquet(ref)
+    assert(got.schema == want.schema)
+    assert(got.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+    assert(got.count() == want.count() && got.exceptAll(want).isEmpty &&
+      want.exceptAll(got).isEmpty)
+    // the same parquet types in the files, not only after Spark reads them
+    def fileSchema(dir: String) = {
+      val f = Files.list(Paths.get(dir)).iterator().asScala
+        .find(_.getFileName.toString.startsWith("part-")).get
+      val in = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toString), new org.apache.hadoop.conf.Configuration()))
+      try in.getFileMetaData.getSchema finally in.close()
+    }
+    assert(fileSchema(s"$out/data/batch_id=0") == fileSchema(ref))
   }
 
   // ------------------------------------------------------------ dedup state
@@ -419,7 +516,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("checkpoint, RocksDB state and sink I/O start no processes (JFR jdk.ProcessStart)") {
-    import scala.jdk.CollectionConverters._
     import spark.implicits._
     // one tiny input per stream `start`: (name, out, ck, min batches, start)
     def dirs(tag: String) = (tmp(s"in_fork_$tag"), tmp(s"out_fork_$tag"), tmp(s"ck_fork_$tag"))
@@ -734,7 +830,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("a dedup checkpoint written on the HDFS or plain RocksDB store resumes on RocksDB changelogs") {
-    import scala.jdk.CollectionConverters._
     import spark.implicits._
     // 12 conversations: turns 0-5, then replays of turns 0-1 with turns 6-9,
     // which only the state written before the restart can suppress
