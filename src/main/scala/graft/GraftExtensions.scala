@@ -15,8 +15,8 @@ import graft.functions._
   * (spark-submit conf, no code changes) and every graft function resolves
   * in SQL — `SELECT cosine_sim(a, b)`, `minhash_sig(shingles, 64)`, … —
   * in ANY session built over that config, including Thrift/Connect
-  * servers where per-session `register(spark)` calls (the runtime
-  * alternative each expression object also offers) are not reachable.
+  * servers. It is the one SQL registration path: the expression objects
+  * offer DataFrame column builders only.
   * Size/seed parameters (numHashes, planes) arrive as integer LITERALS —
   * they shape the generated code, so a non-literal is rejected at
   * analysis time rather than silently interpreted.

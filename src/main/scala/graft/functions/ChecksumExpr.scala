@@ -104,12 +104,4 @@ object ChecksumExpr {
     GraftColumnBridge.column(LuhnCheck(GraftColumnBridge.expression(c)))
   def abn_check(c: Column): Column =
     GraftColumnBridge.column(AbnCheck(GraftColumnBridge.expression(c)))
-
-  /** SQL registration: `SELECT luhn_check(value) FROM ...`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "luhn_check", exprs => LuhnCheck(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "abn_check", exprs => AbnCheck(exprs.head), "built-in")
-  }
 }

@@ -111,14 +111,4 @@ object VectorExpr {
   def argmax_dot(v: Column, m: Column): Column =
     GraftColumnBridge.column(ArgmaxDotExpr(
       GraftColumnBridge.expression(v), GraftColumnBridge.expression(m)))
-
-  /** SQL registration: `SELECT cosine_sim(a, b) FROM …`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_f64", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "argmax_dot", exprs => ArgmaxDotExpr(exprs(0), exprs(1)), "built-in")
-  }
 }

@@ -116,16 +116,6 @@ object Joins {
         lit(100.0) * col("promo_revenue") / col("total_revenue"))
   }
 
-  /** Distributed as-of join: for each left row, the latest right row with
-    * `right.ts <= left.ts` on the same key (DuckDB `ASOF JOIN` semantics,
-    * inclusive). Right payload columns come back `prefix`-renamed; rows
-    * with no prior right match are dropped (inner as-of).
-    *
-    * Plan: tag sides, union (right sorts before left at equal ts so a
-    * same-instant right row is visible), window
-    * `last(payload, ignoreNulls).over(key ORDER BY ts, side ROWS UNBOUNDED
-    * PRECEDING)` — a single exchange on `key`, one sort, O(n) merge.
-    */
   /** [[asofJoin]] with coarse-time-bucket salting — the hot-key variant
     * its scale note proposes. The plain plan serializes a key within ONE
     * partition (the running-last window sorts and scans every row of the
@@ -232,6 +222,16 @@ object Joins {
       asofJoinSalted(left, right, key, ts, rightCols, prefix, tieBreak, bucketSeconds)
     else asofJoin(left, right, key, ts, rightCols, prefix, tieBreak)
 
+  /** Distributed as-of join: for each left row, the latest right row with
+    * `right.ts <= left.ts` on the same key (DuckDB `ASOF JOIN` semantics,
+    * inclusive). Right payload columns come back `prefix`-renamed; rows
+    * with no prior right match are dropped (inner as-of).
+    *
+    * Plan: tag sides, union (right sorts before left at equal ts so a
+    * same-instant right row is visible), window
+    * `last(payload, ignoreNulls).over(key ORDER BY ts, side ROWS UNBOUNDED
+    * PRECEDING)` — a single exchange on `key`, one sort, O(n) merge.
+    */
   def asofJoin(left: DataFrame, right: DataFrame, key: String, ts: String,
       rightCols: Seq[String], prefix: String = "r_",
       tieBreak: Option[String] = None): DataFrame = {

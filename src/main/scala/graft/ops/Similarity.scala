@@ -36,7 +36,11 @@ object Similarity {
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
-  /** Final top-k stage shared by [[bruteTopK]] and [[ivfTopK]]: a bounded
+  /** (vec_id, v): the embedding column as `array<double>`. */
+  private def vectors(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+
+  /** Final top-k stage of every scored search ([[scoredTopK]]): a bounded
     * per-partition heap (typed Aggregator → ObjectHashAggregate, partial +
     * final) instead of a `row_number` window. The window formulation
     * shuffles and SORTS every scored candidate; the aggregate reduces each
@@ -54,6 +58,33 @@ object Similarity {
         (col("pos") + 1).cast("int").as("rank"))
   }
 
+  /** Score a candidate x query join (candidates carry `vec_id`, `nv` and
+    * the vector column `v`; queries carry `q_id`, `q`, `nq`) by cosine
+    * with precomputed norms, self-matches excluded, and keep each query's
+    * best `k` ([[rankTopK]]).
+    */
+  private def scoredTopK(pairs: DataFrame, v: Column, k: Int): DataFrame =
+    rankTopK(
+      pairs.filter(col("vec_id") =!= col("q_id"))
+        .select(col("q_id"), col("vec_id"), cosPre(col("q"), v).as("cos")),
+      k)
+
+  /** Every `stride`-th vector of `base` is a query: (q_id, q), plus the
+    * query norm `nq` where the caller scores with it directly ([[probes]]
+    * adds it otherwise).
+    */
+  private def strideQueries(base: DataFrame, stride: Int, nq: Column*): DataFrame =
+    base.filter(col("vec_id") % stride === 0)
+      .select(col("vec_id").as("q_id") +: col("v").as("q") +: nq.map(_.as("nq")): _*)
+
+  /** Exhaustive top-k over a normed `base` (vec_id, v, nv): its stride
+    * queries are broadcast (small side), candidates scanned once. The plan
+    * of [[bruteTopK]] and [[sqTopK]].
+    */
+  private def exhaustiveTopK(base: DataFrame, k: Int, stride: Int): DataFrame =
+    scoredTopK(base.join(broadcast(strideQueries(base, stride, col("nv")))),
+      col("v"), k)
+
   /** Brute-force cosine top-k: every `stride`-th vector is a query;
     * queries are broadcast (small side), candidates scanned once, reduced
     * per query by the bounded-heap aggregate ([[rankTopK]]). Self-matches
@@ -61,14 +92,8 @@ object Similarity {
     * plan when Q is small; the exchange after scoring carries <= k rows
     * per (task, query), never the candidate set.
     */
-  def bruteTopK(emb: DataFrame, k: Int = 10, stride: Int = 50): DataFrame = {
-    val base = withNorm(emb.select(col("vec_id"), asDouble(col("embedding")).as("v")))
-    val queries = base.filter(col("vec_id") % stride === 0)
-      .select(col("vec_id").as("q_id"), col("v").as("q"), col("nv").as("nq"))
-    val scored = base.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), cosPre(col("q"), col("v")).as("cos"))
-    rankTopK(scored, k)
-  }
+  def bruteTopK(emb: DataFrame, k: Int = 10, stride: Int = 50): DataFrame =
+    exhaustiveTopK(withNorm(vectors(emb)), k, stride)
 
   /** Attach the vector norm ONCE per row (separate select so CollapseProject
     * cannot inline `v` into the norm — `dot(v, v)` references it twice).
@@ -88,20 +113,56 @@ object Similarity {
   private def cosPre(q: Column, v: Column): Column =
     dot(q, v) / (col("nq") * col("nv"))
 
+  /** A vector's `list_id`: argmax of `v` against the normalized centroids. */
+  private def assignLists(base: DataFrame, cents: Seq[Seq[Double]]): DataFrame =
+    base.withColumn("list_id",
+      graft.functions.VectorExpr.argmax_dot(col("v"), typedlit(cents)))
+
+  /** Assignment quality of a stored row, `q` = cos(v, centroid[list_id]):
+    * one dot against its own stored assignment (no re-argmax).
+    */
+  private def assignmentQuality(cents: Seq[Seq[Double]]): Column =
+    (dot(col("v"), element_at(typedlit(cents), col("list_id") + 1))
+      / norm(col("v"))).as("q")
+
+  /** The `n` hash-smallest vectors of `base` (vec_id, v): a deterministic
+    * pseudo-random sample in one TakeOrderedAndProject scan (no `count()`
+    * pre-scan), collected to the driver.
+    */
+  private def hashSeeds(base: DataFrame, n: Int): Seq[Seq[Double]] =
+    base.withColumn("h", xxhash64(col("vec_id")))
+      .orderBy("h").limit(n).select("v").collect()
+      .map(_.getSeq[Double](0)).toSeq
+
+  /** The mean half of a Lloyd update: `points` holds the cell columns
+    * `cells` (int keys), the coordinate index `pos` and its value `x`.
+    * Per-(cell, pos) partial sums are map-side combined, so the exchange
+    * and the collect carry <= cells x dim rows at any corpus size; each
+    * cell's mean is indexed by `pos % dim`. A cell with no members is
+    * absent from the result and keeps its old centroid at the caller.
+    */
+  private def cellMeans(points: DataFrame, cells: Seq[String],
+      dim: Int): Map[Seq[Int], Seq[Double]] = {
+    val nk = cells.size
+    points.groupBy((cells :+ "pos").map(col): _*)
+      .agg(sum("x").as("sx"), count(lit(1)).as("n"))
+      .collect()
+      .groupBy(r => (0 until nk).map(r.getInt))
+      .map { case (cell, rs) =>
+        val mean = new Array[Double](dim)
+        rs.foreach(r =>
+          mean(r.getInt(nk) % dim) = r.getDouble(nk + 1) / r.getLong(nk + 2))
+        cell -> mean.toSeq
+      }
+  }
+
   /** Spherical-k-means centroid training (deterministic hash-sampled
     * seeds + `kmeansIters` Lloyd refinements); returns the NORMALIZED
     * centroid matrix. Factored out so [[ivfTopK]] (inline) and
     * [[buildIvfIndex]] (persistent) train identically.
     */
   def trainCentroids(emb: DataFrame, nlist: Int, kmeansIters: Int): Seq[Seq[Double]] = {
-    val base = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    // deterministic pseudo-random centroid sample: nlist smallest by hash
-    val cents: Array[(Long, Seq[Double])] = base
-      .withColumn("h", xxhash64(col("vec_id")))
-      .orderBy("h").limit(nlist)
-      .select(col("vec_id"), col("v"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
+    val base = vectors(emb)
     // pre-normalized centroid MATRIX: argmax_i cos(v, c_i) =
     // argmax_i dot(v, c_i/|c_i|) since |v| is constant per row. One
     // typedlit matrix + a native looped argmax keeps the assignment
@@ -112,37 +173,23 @@ object Similarity {
       val cn = math.sqrt(cv.map(x => x * x).sum)
       if (cn == 0.0) cv else cv.map(_ / cn)
     }
-    val sampled: Seq[Seq[Double]] = cents.toSeq.map(c => normalize(c._2))
+    // deterministic pseudo-random centroid sample: nlist smallest by hash
+    val sampled: Seq[Seq[Double]] = hashSeeds(base, nlist).map(normalize)
     // Lloyd refinement (spherical k-means): hash-sampled seeds are a poor
     // quantizer when the corpus has more natural clusters than nlist — a
     // cluster with no sampled "home" centroid scatters its members across
     // lists by noise correlations and recall collapses (measured 0.48 on
     // the 256-cluster bench corpus; 0.99+ after one iteration). Each
     // iteration is ONE scan: the same codegen'd argmax assignment, then a
-    // per-(list,dim) partial sum — map-side combine compresses every task
-    // to <= nlist x dim rows before the shuffle, so the exchange is tiny
-    // at any corpus size. Means collect as nlist x dim doubles (driver-
-    // side matrix, same footprint as the centroid literals themselves).
-    (1 to kmeansIters).foldLeft(sampled) {
-      (cn, _) =>
-        val dim = cn.head.size
-        val sums = base
-          .withColumn("list_id",
-            graft.functions.VectorExpr.argmax_dot(col("v"), typedlit(cn)))
-          .select(col("list_id"), posexplode(col("v")).as(Seq("pos", "x")))
-          .groupBy("list_id", "pos")
-          .agg(sum("x").as("sx"), count(lit(1)).as("n"))
-          .collect()
-          .groupBy(_.getInt(0))
-        cn.indices.map { i =>
-          sums.get(i) match {
-            case Some(rs) =>
-              val mean = new Array[Double](dim)
-              rs.foreach(r => mean(r.getInt(1)) = r.getDouble(2) / r.getLong(3))
-              normalize(mean.toSeq)
-            case None => cn(i) // empty list keeps its seed
-          }
-        }
+    // per-(list,dim) partial sum ([[cellMeans]]). Means collect as
+    // nlist x dim doubles (driver-side matrix, same footprint as the
+    // centroid literals themselves).
+    (1 to kmeansIters).foldLeft(sampled) { (cn, _) =>
+      val means = cellMeans(assignLists(base, cn)
+          .select(col("list_id"), posexplode(col("v")).as(Seq("pos", "x"))),
+        Seq("list_id"), cn.head.size)
+      // an empty list keeps its seed
+      cn.indices.map(i => means.get(Seq(i)).fold(cn(i))(normalize))
     }
   }
 
@@ -177,36 +224,28 @@ object Similarity {
     */
   def ivfTopKWithCentroids(emb: DataFrame, centsNorm: Seq[Seq[Double]],
       k: Int = 10, stride: Int = 50, nprobe: Int = 4): DataFrame = {
-    val base = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val base = vectors(emb)
+    val pr = probes(strideQueries(base, stride), centsNorm, nprobe)
+    scoredTopK(withNorm(assignLists(base, centsNorm)).join(broadcast(pr), "list_id"),
+      col("v"), k)
+  }
 
-    // per-centroid cosine score structs (probes side only: Q rows)
-    def centScores(v: Column, nv: Column): Seq[Column] =
-      centsNorm.zipWithIndex.map { case (cv, i) =>
-        struct((dot(v, typedlit(cv)) / nv).as("cos"), lit(i).as("c_idx"))
-      }
-
-    val assigned = withNorm(base
-      .withColumn("list_id",
-        graft.functions.VectorExpr.argmax_dot(col("v"), typedlit(centsNorm)))
-      .select("vec_id", "v", "list_id"))
-
-    // probes: per query the nprobe best centroids, exploded — Q*nprobe rows
-    // (norm(q) is computed once for probe selection and KEPT for scoring)
-    val queries = base.filter(col("vec_id") % stride === 0)
-      .select(col("vec_id").as("q_id"), col("v").as("q"))
-    val probes = queries
+  /** Probes: per query (q_id, q) the `nprobe` best lists by cosine to
+    * the normalized centroids, exploded — Q*nprobe rows. The per-centroid
+    * score structs touch the probes side only (Q rows), and the query norm
+    * `nq` computed once for probe selection is KEPT for scoring.
+    */
+  private def probes(queries: DataFrame, cents: Seq[Seq[Double]],
+      nprobe: Int): DataFrame = {
+    val centScores = cents.zipWithIndex.map { case (cv, i) =>
+      struct((dot(col("q"), typedlit(cv)) / col("nq")).as("cos"), lit(i).as("c_idx"))
+    }
+    queries
       .withColumn("nq", norm(col("q")))
       .withColumn("probe_lists",
-        slice(sort_array(array(centScores(col("q"), col("nq")): _*), asc = false),
-          1, nprobe))
+        slice(sort_array(array(centScores: _*), asc = false), 1, nprobe))
       .select(col("q_id"), col("q"), col("nq"),
         explode(col("probe_lists").getField("c_idx")).as("list_id"))
-
-    rankTopK(
-      assigned.join(broadcast(probes), "list_id")
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id"), cosPre(col("q"), col("v")).as("cos")),
-      k)
   }
 
   /** Persist an IVF index: `centroids.parquet` (list_id, centroid) plus
@@ -226,17 +265,14 @@ object Similarity {
     cn.zipWithIndex.map { case (v, i) => (i, v) }
       .toDF("list_id", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids.parquet")
-    emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("list_id",
-        graft.functions.VectorExpr.argmax_dot(col("v"), typedlit(cn)))
+    assignLists(vectors(emb), cn)
       .write.mode("overwrite").partitionBy("list_id").parquet(s"$dir/assigned.parquet")
     // build-time quality baseline for the staleness probe: one scan of the
     // just-written index, avg + count in the SAME aggregate (no separate
     // emb.count() pass — at index-build scale an extra corpus scan is real
     // money for a value the probe can get from rows it already reads)
     val st = spark.read.parquet(s"$dir/assigned.parquet")
-      .select((dot(col("v"), element_at(typedlit(cn), col("list_id") + 1))
-        / norm(col("v"))).as("q"))
+      .select(assignmentQuality(cn))
       .agg(avg("q").as("build_quality"), count(lit(1)).as("n"))
       .head()
     // an empty corpus yields a null avg — fail with a descriptive error
@@ -255,11 +291,14 @@ object Similarity {
     * a consistent file set (snapshot isolation by immutability), and the
     * pointer swap is the only mutation.
     */
-  def resolveIndex(dir: String): String = {
+  def resolveIndex(dir: String): String =
+    currentVersion(dir).fold(dir)(v => s"$dir/versions/$v")
+
+  /** The version name in `dir`'s `CURRENT` pointer, if it has one. */
+  private def currentVersion(dir: String): Option[String] = {
     val cur = new java.io.File(dir, "CURRENT")
-    if (!cur.exists()) dir
-    else s"$dir/versions/" + new String(
-      java.nio.file.Files.readAllBytes(cur.toPath), "UTF-8").trim
+    if (!cur.exists()) None
+    else Some(new String(java.nio.file.Files.readAllBytes(cur.toPath), "UTF-8").trim)
   }
 
   /** Load an index's (normalized) centroid matrix — bounded driver
@@ -286,9 +325,7 @@ object Similarity {
     // same snapshot even if a rebuild swaps CURRENT between the two
     val p = resolveIndex(dir)
     val cn = loadCentroids(newEmb.sparkSession, p)
-    newEmb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("list_id",
-        graft.functions.VectorExpr.argmax_dot(col("v"), typedlit(cn)))
+    assignLists(vectors(newEmb), cn)
       .write.mode("append").partitionBy("list_id").parquet(s"$p/assigned.parquet")
   }
 
@@ -315,12 +352,7 @@ object Similarity {
     // keeps even a violated assumption from corrupting a published
     // version: the loser of a CURRENT race publishes a complete snapshot,
     // never a torn one.)
-    var nextV = {
-      val f = new java.io.File(dir, "CURRENT")
-      if (!f.exists()) 1
-      else new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        .trim.stripPrefix("v").toInt + 1
-    }
+    var nextV = currentVersion(dir).fold(1)(_.stripPrefix("v").toInt + 1)
     while (new java.io.File(s"$dir/versions/v$nextV").exists()) nextV += 1
     val vName = s"v$nextV"
     buildIvfIndex(corpus, s"$dir/versions/$vName", nlist, kmeansIters)
@@ -355,8 +387,7 @@ object Similarity {
     val p = resolveIndex(dir) // once — centroids + rows from one snapshot
     val cn = loadCentroids(spark, p)
     val row = spark.read.parquet(s"$p/assigned.parquet")
-      .select((dot(col("v"), element_at(typedlit(cn), col("list_id") + 1))
-        / norm(col("v"))).as("q"))
+      .select(assignmentQuality(cn))
       .agg(avg("q")).head()
     require(!row.isNullAt(0), s"ivfIndexQuality: index at $dir holds no rows")
     row.getDouble(0)
@@ -391,28 +422,15 @@ object Similarity {
     // immutable snapshot even if a rebuild swaps CURRENT mid-planning
     val snap = resolveIndex(indexDir)
     val cn: Seq[Seq[Double]] = loadCentroids(spark, snap)
-    def centScores(v: Column, nv: Column): Seq[Column] =
-      cn.zipWithIndex.map { case (cv, i) =>
-        struct((dot(v, typedlit(cv)) / nv).as("cos"), lit(i).as("c_idx"))
-      }
-    val q = queries.select(col("q_id"), asDouble(col("embedding")).as("q"))
-    val probes = q.withColumn("nq", norm(col("q")))
-      .withColumn("probe_lists",
-        slice(sort_array(array(centScores(col("q"), col("nq")): _*), asc = false),
-          1, nprobe))
-      .select(col("q_id"), col("q"), col("nq"),
-        explode(col("probe_lists").getField("c_idx")).as("list_id"))
+    val pr = probes(queries.select(col("q_id"), asDouble(col("embedding")).as("q")),
+      cn, nprobe)
     // bounded driver materialization (<= nlist ints): makes the partition
     // filter STATIC so pruning happens at file listing, not execution
-    val probedLists: Seq[Int] = probes.select("list_id").distinct()
+    val probedLists: Seq[Int] = pr.select("list_id").distinct()
       .collect().map(_.getInt(0)).toSeq
     val assigned = withNorm(spark.read.parquet(s"$snap/assigned.parquet")
       .filter(col("list_id").isin(probedLists: _*)))
-    rankTopK(
-      assigned.join(broadcast(probes), "list_id")
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id"), cosPre(col("q"), col("v")).as("cos")),
-      k)
+    scoredTopK(assigned.join(broadcast(pr), "list_id"), col("v"), k)
   }
 
   /** HOF reference formulation of the hyperplane code — kept for the
@@ -443,7 +461,7 @@ object Similarity {
     */
   def lshCosinePairs(emb: DataFrame, planes: Int = 16,
       threshold: Double = 0.9, maxBucket: Int = 1000): DataFrame = {
-    val base = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val base = vectors(emb)
     // native codegen hyperplane code, bit-identical to lshCodeHof
     val code = graft.functions.SketchExpr.hyperplane_code(col("v"), planes)
     val coded = base.select(col("vec_id"), code.as("code"))
@@ -486,11 +504,9 @@ object Similarity {
     */
   def semanticDedupPairs(emb: DataFrame, nlist: Int = 16, kmeansIters: Int = 2,
       threshold: Double = 0.95, maxCluster: Int = 10000): DataFrame = {
-    val base = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val base = vectors(emb)
     val cents = trainCentroids(emb, nlist, kmeansIters)
-    val ids = base
-      .withColumn("list_id",
-        graft.functions.VectorExpr.argmax_dot(col("v"), typedlit(cents)))
+    val ids = assignLists(base, cents)
       .select(col("vec_id"), col("list_id"))
       .repartition(col("list_id"))
     val cand = Lsh.selfJoin(Lsh.capped(ids, maxCluster, "list_id"),
@@ -560,13 +576,8 @@ object Similarity {
     */
   def sqTopK(emb: DataFrame, k: Int = 10, stride: Int = 50): DataFrame = {
     val (mn, mx) = sqTrain(emb)
-    val base = withNorm(emb.select(col("vec_id"),
-      sqRecon(asDouble(col("embedding")), mn, mx).as("v")))
-    val queries = base.filter(col("vec_id") % stride === 0)
-      .select(col("vec_id").as("q_id"), col("v").as("q"), col("nv").as("nq"))
-    val scored = base.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), cosPre(col("q"), col("v")).as("cos"))
-    rankTopK(scored, k)
+    exhaustiveTopK(withNorm(emb.select(col("vec_id"),
+      sqRecon(asDouble(col("embedding")), mn, mx).as("v"))), k, stride)
   }
 
   // ------------------------------------------------------------------ PQ
@@ -601,40 +612,26 @@ object Similarity {
     */
   def pqTrain(emb: DataFrame, m: Int = 8, k: Int = 16,
       iters: Int = 3): Seq[Seq[Seq[Double]]] = {
-    val base = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val seeds = base.withColumn("h", xxhash64(col("vec_id")))
-      .orderBy("h").limit(k).select("v").collect()
-      .map(_.getSeq[Double](0))
-    require(seeds.length == k, s"corpus smaller than k=$k")
+    val base = vectors(emb)
+    val seeds = hashSeeds(base, k)
+    require(seeds.size == k, s"corpus smaller than k=$k")
     // dim from the seed rows already on the driver — no separate size() scan
-    val dim = seeds.head.length
+    val dim = seeds.head.size
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val sub = dim / m
     val init: Seq[Seq[Seq[Double]]] =
-      (0 until m).map(j => seeds.toSeq.map(_.slice(j * sub, (j + 1) * sub)))
+      (0 until m).map(j => seeds.map(_.slice(j * sub, (j + 1) * sub)))
     (1 to iters).foldLeft(init) { (cb, _) =>
       val jCol = (col("pos") / lit(sub)).cast("int")
-      val rows = base
-        .select(pqCodes(col("v"), cb, sub).as("codes"),
-          posexplode(col("v")).as(Seq("pos", "x")))
-        .select(jCol.as("j"), col("pos"), col("x"),
-          element_at(col("codes"), jCol + 1).as("code"))
-        .groupBy("j", "code", "pos")
-        .agg(sum("x").as("sx"), count(lit(1)).as("n"))
-        .collect()
-      val byCell = rows.groupBy(r => (r.getInt(0), r.getInt(1)))
-      (0 until m).map { j =>
-        (0 until k).map { c =>
-          byCell.get((j, c)) match {
-            case Some(rs) =>
-              val mean = new Array[Double](sub)
-              rs.foreach(r =>
-                mean(r.getInt(2) - j * sub) = r.getDouble(3) / r.getLong(4))
-              mean.toSeq
-            case None => cb(j)(c) // empty cell keeps its previous centroid
-          }
-        }
-      }
+      val means = cellMeans(base
+          .select(pqCodes(col("v"), cb, sub).as("codes"),
+            posexplode(col("v")).as(Seq("pos", "x")))
+          .select(jCol.as("j"), col("pos"), col("x"),
+            element_at(col("codes"), jCol + 1).as("code")),
+        Seq("j", "code"), sub)
+      // an empty cell keeps its previous centroid
+      (0 until m).map(j =>
+        (0 until k).map(c => means.getOrElse(Seq(j, c), cb(j)(c))))
     }
   }
 
@@ -667,17 +664,15 @@ object Similarity {
       iters: Int = 3): DataFrame = {
     val cb = pqTrain(emb, m, codebookK, iters)
     val sub = cb.head.head.size
-    val base = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val base = vectors(emb)
     // reconstructed-candidate norm once per ROW (separate select — no
     // collapse), query norm once per query: the ADC shortlist scan pays
     // one dot per pair instead of three
     val cand = base.select(col("vec_id"), pqRecon(col("v"), cb, sub).as("r"))
       .select(col("vec_id"), col("r"), norm(col("r")).as("nv"))
-    val queries = base.filter(col("vec_id") % stride === 0)
-      .select(col("vec_id").as("q_id"), col("v").as("q"), norm(col("v")).as("nq"))
-    val scored = cand.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), cosPre(col("q"), col("r")).as("cos"))
-    val short = rankTopK(scored, shortlist).select("q_id", "vec_id")
+    val queries = strideQueries(base, stride, norm(col("v")))
+    val short = scoredTopK(cand.join(broadcast(queries)), col("r"), shortlist)
+      .select("q_id", "vec_id")
     val rer = short.join(base, Seq("vec_id"))
       .join(broadcast(queries), Seq("q_id"))
       .select(col("q_id"), col("vec_id"), cosine(col("q"), col("v")).as("cos"))
@@ -731,7 +726,7 @@ object Similarity {
     */
   def jlDistortion(emb: DataFrame, outDim: Int = 16, qStride: Int = 50,
       cStride: Int = 17): DataFrame = {
-    val base = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val base = vectors(emb)
     val inDim = base.select(size(col("v"))).head().getInt(0)
     val p = jlMatrix(inDim, outDim)
     val withProj = base.select(col("vec_id"), col("v"),

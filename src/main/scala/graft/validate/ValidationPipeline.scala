@@ -1,5 +1,6 @@
 package graft.validate
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model._
@@ -44,13 +45,27 @@ object ValidationPipeline {
         col("tool"), col("ts"))
       .withColumn("msg", from_json(col("text"), Schemas.envelope))
 
+  /** The catalog as one broadcast byte array (see the object doc). */
+  private def packed(spark: SparkSession, cat: Catalog): Broadcast[PackedCatalog] =
+    spark.sparkContext.broadcast(PackedCatalog(cat))
+
+  /** The decision counters of [[decide]] and [[decideFast]], surfaced as
+    * the observed metric `graft_out`.
+    */
+  private def observeOut(d: Dataset[TurnDecision]): Dataset[TurnDecision] =
+    d.observe("graft_out",
+      count(lit(1)).as("rows_out"),
+      sum(when(col("decision") === "valid", 1L).otherwise(0L)).as("valid"),
+      sum(when(col("decision") === "rejected", 1L).otherwise(0L)).as("rejected"),
+      sum(when(col("promoted"), 1L).otherwise(0L)).as("promoted"))
+
   /** Full decision stream/frame. Works identically for batch and streaming
     * DataFrames (same stages — parity by construction, SURVEY.md §7.2.3).
     */
   def decide(spark: SparkSession, transcripts: DataFrame, cat: Catalog,
       enableBlacklist: Boolean = true): Dataset[TurnDecision] = {
     import spark.implicits._
-    val bcat = spark.sparkContext.broadcast(PackedCatalog(cat))
+    val bcat = packed(spark, cat)
     parsed(transcripts)
       // T1/T7 peek analogues (TP:132,136): lineage counters as observed
       // metrics (CollectMetrics) instead of per-row logging — free at scale,
@@ -64,11 +79,7 @@ object ValidationPipeline {
           || col("msg.data_type").isNull, 1L).otherwise(0L)).as("malformed_envelope"))
       .as[ParsedTurn]
       .map(t => Evaluator.evalTurn(t, bcat.value.catalog, enableBlacklist))
-      .observe("graft_out",
-        count(lit(1)).as("rows_out"),
-        sum(when(col("decision") === "valid", 1L).otherwise(0L)).as("valid"),
-        sum(when(col("decision") === "rejected", 1L).otherwise(0L)).as("rejected"),
-        sum(when(col("promoted"), 1L).otherwise(0L)).as("promoted"))
+      .transform(observeOut)
   }
 
   /** Fast fused variant: tidy stays a Catalyst expression, but parse +
@@ -81,7 +92,7 @@ object ValidationPipeline {
   def decideFast(spark: SparkSession, transcripts: DataFrame, cat: Catalog,
       enableBlacklist: Boolean = true): Dataset[TurnDecision] = {
     import spark.implicits._
-    val bcat = spark.sparkContext.broadcast(PackedCatalog(cat))
+    val bcat = packed(spark, cat)
     transcripts
       .filter(col("text").isNotNull)
       .as[Turn]
@@ -91,11 +102,7 @@ object ValidationPipeline {
           JsonParse.parseEnvelope(tidied))
         Evaluator.evalTurn(pt, bcat.value.catalog, enableBlacklist)
       }
-      .observe("graft_out",
-        count(lit(1)).as("rows_out"),
-        sum(when(col("decision") === "valid", 1L).otherwise(0L)).as("valid"),
-        sum(when(col("decision") === "rejected", 1L).otherwise(0L)).as("rejected"),
-        sum(when(col("promoted"), 1L).otherwise(0L)).as("promoted"))
+      .transform(observeOut)
   }
 
   /** The three routed outputs of one decision frame (topics `valid_data`,

@@ -23,10 +23,19 @@ class ExtensionsSpec extends SparkSpec {
         .head().getDouble(0) == 23.0)
       assert(s2.sql("SELECT argmax_dot(array(0.0d, 1.0d), array(array(1.0d, 0.0d), array(0.0d, 1.0d))) a")
         .head().getInt(0) == 1)
+      // over embedding rows read from parquet: |v|^2 > 0 and cos(v, v) = 1
+      s2.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+        .selectExpr("cast(embedding as array<double>) AS v")
+        .createOrReplaceTempView("vx")
+      val r = s2.sql("SELECT cosine_sim(v, v) AS c, dot_f64(v, v) AS d FROM vx LIMIT 5")
+        .collect()
+      assert(r.nonEmpty &&
+        r.forall(x => math.abs(x.getDouble(0) - 1.0) < 1e-9 && x.getDouble(1) > 0))
       // checksum exprs return the 0=valid/1=invalid/2=abort code
       assert(s2.sql("SELECT luhn_check('4111111111111111') l").head().getInt(0) == 0)
       assert(s2.sql("SELECT luhn_check('4111111111111112') l").head().getInt(0) == 1)
       assert(s2.sql("SELECT luhn_check('not-digits') l").head().getInt(0) == 2)
+      assert(s2.sql("SELECT luhn_check('4242424242424242') l").head().getInt(0) == 0)
       assert(s2.sql("SELECT abn_check('51824753556') a").head().getInt(0) == 0)
       assert(s2.sql("SELECT simhash64(array('a','b')) s").head().getLong(0) ==
         graft.functions.SketchKernels.simhash64(

@@ -278,6 +278,33 @@ class OpsSpec extends SparkSpec {
     assert(Similarity.resolveIndex(idx).endsWith("versions/v2"))
   }
 
+  test("IVF versions: a rebuild skips a crashed rebuild's leftover dir; publish needs a built snapshot") {
+    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_ver").toString
+    Similarity.buildIvfIndex(emb, idx, nlist = 4)
+    def leftover(v: String): Unit =
+      assert(new java.io.File(s"$idx/versions/$v").mkdirs(), s"mkdir $v")
+    def current: String = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(idx, "CURRENT")), "UTF-8")
+    // a crashed first rebuild left versions/v1 behind, unpublished
+    leftover("v1")
+    val e = intercept[IllegalArgumentException](Similarity.publishVersion(idx, "v1"))
+    assert(e.getMessage.contains("no built snapshot"), e.getMessage)
+    assert(!new java.io.File(idx, "CURRENT").exists())
+    assert(Similarity.resolveIndex(idx) == idx)
+    // no CURRENT yet: the next version would be v1, which is taken
+    assert(Similarity.rebuildIvfIndex(spark, idx, nlist = 4) == "v2")
+    assert(current == "v2")
+    // CURRENT = v2 and a leftover v3: the next free version is v4
+    leftover("v3")
+    intercept[IllegalArgumentException](Similarity.publishVersion(idx, "v3"))
+    assert(current == "v2")
+    assert(Similarity.rebuildIvfIndex(spark, idx, nlist = 4) == "v4")
+    assert(Similarity.resolveIndex(idx) == s"$idx/versions/v4")
+    // the leftovers stay as they were: never written into
+    Seq("v1", "v3").foreach(v =>
+      assert(new java.io.File(s"$idx/versions/$v").list().isEmpty, v))
+  }
+
   test("LSH cosine pairs: identical vectors always collide; output above threshold") {
     import spark.implicits._
     val dup = emb.filter($"vec_id" < 10)
